@@ -7,10 +7,12 @@ from __future__ import annotations
 import csv
 import os
 import re
+import threading
 
 import pytest
 
 from etl_onprem_to_cloud_spark.pipeline import run_netflix_pipeline
+from etl_onprem_to_cloud_spark.schemas import NETFLIX_CLEAN
 
 HEADER = [
     "show_id", "type", "title", "director", "cast", "country", "date_added",
@@ -83,6 +85,80 @@ def test_pipeline_end_to_end(spark, input_dir, tmp_path):
     rep = {(r["genre_group"], r["country"]): r["n_titles"] for r in res.report.collect()}
     assert rep[("Crime", "Spain")] == 1
     assert rep[("Kids", "United Kingdom")] == 1
+
+
+def _bounded(fn, timeout_s=300):
+    """``fn()`` in a daemon thread: a row count that never arrives fails
+    the test instead of blocking the suite."""
+    box = {}
+
+    def target():
+        try:
+            box["value"] = fn()
+        except BaseException as e:  # re-raised in the test's thread
+            box["error"] = e
+
+    t = threading.Thread(target=target, daemon=True)
+    t.start()
+    t.join(timeout_s)
+    assert not t.is_alive(), f"pipeline still running after {timeout_s} s"
+    if "error" in box:
+        raise box["error"]
+    return box["value"]
+
+
+@pytest.mark.parametrize(
+    "rows, counts", [(NEW_ROWS, (4, 2)), ([], (0, 0))], ids=["rows", "header-only"]
+)
+@pytest.mark.parametrize(
+    "parquet, csv_sink",
+    [(True, True), (True, False), (False, True), (False, False)],
+    ids=["parquet+csv", "parquet", "csv", "no-sink"],
+)
+def test_pipeline_counts_and_schema_per_sink(
+    spark, tmp_path, rows, counts, parquet, csv_sink
+):
+    d = tmp_path / "input"
+    d.mkdir()
+    _write_csv(d / "netflix.csv", rows)
+    res = _bounded(
+        lambda: run_netflix_pipeline(
+            spark,
+            str(d),
+            parquet_out=str(tmp_path / "pq") if parquet else None,
+            csv_out=str(tmp_path / "csv") if csv_sink else None,
+            partition_by=["country"],
+        )
+    )
+    assert (res.rows_in, res.rows_out) == counts
+    assert res.clean.schema.simpleString() == NETFLIX_CLEAN.simpleString()
+    if not rows:
+        assert res.report.collect() == []
+
+
+def test_pipeline_scans_csv_once(spark, input_dir, tmp_path):
+    """With both sinks the CSV is parsed by the Parquet write alone: the
+    build runs at most the two sink jobs, and the report scans the
+    written Parquet."""
+    sc = spark.sparkContext
+    group = "test_pipeline_scans_csv_once"
+    sc.setJobGroup(group, group)
+    try:
+        res = run_netflix_pipeline(
+            spark,
+            input_dir,
+            parquet_out=str(tmp_path / "pq"),
+            csv_out=str(tmp_path / "csv"),
+            partition_by=["country"],
+        )
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+    res.report.collect()
+    plan = res.report._jdf.queryExecution().executedPlan().toString()
+    # AQE prints its final and initial plans; both must scan Parquet only.
+    assert set(re.findall(r"FileScan (\w+)", plan)) == {"parquet"}, plan
 
 
 def test_pipeline_empty_dir(spark, tmp_path):
