@@ -291,10 +291,9 @@ ANCHORS = [
 def calibrate(spark) -> tuple[float, float]:
     """Host-speed calibration (see module docstring): one fixed
     CPU-bound Python loop and one fixed Spark job, both independent of
-    SF.  ONE definition on purpose -- scripts/anchor_drift_probe.py
-    attaches these numbers to standalone timings so they stay
-    comparable to bench rows; a drifted copy would quietly break that
-    arithmetic."""
+    SF.  ONE definition on purpose -- scripts/ab.py attaches these
+    numbers to standalone timings so they stay comparable to bench
+    rows; a drifted copy would quietly break that arithmetic."""
     t0 = time.perf_counter()
     acc = 0
     for i in range(10_000_000):

@@ -24,8 +24,6 @@ engine can reproduce every stage bit-for-bit.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -337,18 +335,6 @@ def minhash_lsh_candidate_pairs(
     return count_carry_jaccard(cand, ex, jaccard_threshold, id_name=id_col)
 
 
-def _verify_build(df: DataFrame) -> DataFrame:
-    """Join-strategy marker for the count-carry verify joins' build
-    sides (the candidate-id semi-join prune + the pruned pa/pb posting
-    streams): ``shuffle_hash`` (r7-r10) -- none of these relations may
-    ever be FORCED to broadcast (candidate volume grows with the
-    corpus; the MLlib-twin mis-broadcast lesson), but a
-    runtime-measured AQE broadcast stays available only WITHOUT the
-    static hint.  One definition so probe scripts can A/B the strategy
-    by monkeypatching (the _node_build pattern)."""
-    return df.hint("shuffle_hash")
-
-
 def count_carry_jaccard(
     cand: DataFrame,
     postings: DataFrame,
@@ -415,7 +401,7 @@ def count_carry_jaccard(
         .union(cand.select(F.col("id_b").alias(id_name)))
         .distinct()
     )
-    exc = postings.join(_verify_build(cand_ids), id_name, "left_semi")
+    exc = postings.join(cand_ids.hint("shuffle_hash"), id_name, "left_semi")
     pa = exc.select(
         F.col(id_name).alias("id_a"), "shingle", F.col("n_sh").alias("n_a")
     )
@@ -423,8 +409,8 @@ def count_carry_jaccard(
         F.col(id_name).alias("id_b"), "shingle", F.col("n_sh").alias("n_b")
     )
     common = (
-        cand.join(_verify_build(pa), "id_a")
-        .join(_verify_build(pb), ["id_b", "shingle"])
+        cand.join(pa.hint("shuffle_hash"), "id_a")
+        .join(pb.hint("shuffle_hash"), ["id_b", "shingle"])
         .groupBy("id_a", "id_b", "n_a", "n_b")
         .agg(F.count(F.lit(1)).alias("__c"))
     )
@@ -592,17 +578,6 @@ def ngram_jaccard_pairs(
 # 5. Transitive closure: near-dup pairs -> dedup clusters
 # --------------------------------------------------------------------------
 
-def _node_build(df: DataFrame) -> DataFrame:
-    """Join-strategy marker for the node-sized build side of a
-    per-round iterative join (labels / mins): ``shuffle_hash`` (r10).
-    The side derives from a corpus-scaled subtree, so it must never be
-    FORCED to broadcast -- but a runtime-measured AQE broadcast (which
-    ignores this hint when the side measures tiny) stays available.
-    One definition so probe scripts can A/B the strategy by
-    monkeypatching (scripts/ab_iterative_r11.py)."""
-    return df.hint("shuffle_hash")
-
-
 def connected_components(
     pairs: DataFrame,
     a_col: str = "id_a",
@@ -667,7 +642,7 @@ def connected_components(
         # corpus-scaled subtree so they may never broadcast, but their
         # per-partition hash build is bounded by the node set.
         neighbor_min = (
-            edges.join(_node_build(labels), edges.dst == labels.node)
+            edges.join(labels.hint("shuffle_hash"), edges.dst == labels.node)
             .groupBy("src")
             .agg(F.min("component").alias("nbr_component"))
         )
@@ -898,7 +873,7 @@ def connected_components_star(
         # groupBy already hash-partitioned on src, so the build side
         # re-reads in place and the edge stream skips its per-phase sort.
         return (
-            both.join(_node_build(mins), "src")
+            both.join(mins.hint("shuffle_hash"), "src")
             .filter(F.col("dst") > F.col("src"))
             .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
             .distinct()
@@ -911,7 +886,7 @@ def connected_components_star(
         smaller = both.filter(F.col("dst") < F.col("src"))
         mins = smaller.groupBy("src").agg(F.min("dst").alias("m"))
         relink = (
-            smaller.join(_node_build(mins), "src")
+            smaller.join(mins.hint("shuffle_hash"), "src")
             .filter(F.col("dst") != F.col("m"))
             .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
         )
@@ -1037,12 +1012,12 @@ def containment_pairs(
     campaign): the third decade reads exponent 1.04-1.17 depending on
     the run, and the residual over linear survives every mechanism
     tested by direct experiment -- fan-out width (per-partition n
-    held constant via SPARK_GRAFT_CONTAINMENT_FANOUT=40 -> 1280
-    partitions: exponent 1.054 vs 1.059 at 128, so the lexsort
-    log-factor hypothesis r7 wrote here is REFUTED), sort spill (AQE
-    initialPartitionNum = 8x cores: 0 B spilled, not faster), spill
-    write-back (the fastest sf100 run spilled 45.7 GB), heap size
-    (80g: less spill, slower), and read I/O (diskstats: ~0.08 GB
+    held constant with a 40x fan-out -> 1280 partitions: exponent
+    1.054 vs 1.059 at 128, PROBES_r08.json ``containment_fanout``,
+    so the lexsort log-factor hypothesis r7 wrote here is REFUTED),
+    sort spill (AQE initialPartitionNum = 8x cores: 0 B spilled, not
+    faster), spill write-back (the fastest sf100 run spilled
+    45.7 GB), heap size (80g: less spill, slower), and read I/O (diskstats: ~0.08 GB
     physical reads at BOTH decades -- all cache-served).  Every byte
     counter is linear (shuffle 10.2-10.8x for 10x data; collision
     volume exactly linear; no array-typed exchanges), while
@@ -1080,22 +1055,7 @@ def containment_pairs(
     # together (the lexsort key is (id_a, id_b)), and pair-key hashing
     # keeps the bound true under hot-doc skew, where id_a-only hashing
     # would send one doc's entire incidence share to a single worker.
-    # SPARK_GRAFT_CONTAINMENT_FANOUT is a PROBE-ONLY override of the
-    # 4x multiplier: the sf100 fan-out experiment (VERDICT r7 item 1)
-    # holds per-partition incidence rows constant across decades to
-    # isolate the lexsort log factor from real scaling.  Unset (every
-    # production / harness path), the shape is byte-identical to r7.
-    # Parse defensively (ADVICE r8): a garbage or <1 value -- e.g. a
-    # probe process that died before clearing the env var, or a typo
-    # -- falls back to the production 4x instead of raising or
-    # driving repartition(<=0).
-    try:
-        mult = int(os.environ.get("SPARK_GRAFT_CONTAINMENT_FANOUT", "4"))
-    except ValueError:
-        mult = 4
-    if mult < 1:
-        mult = 4
-    fanout = mult * docs.sparkSession.sparkContext.defaultParallelism
+    fanout = 4 * docs.sparkSession.sparkContext.defaultParallelism
     inc = (
         a.join(b.hint("merge"), join_cond)
         .select(

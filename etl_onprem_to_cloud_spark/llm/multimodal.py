@@ -38,16 +38,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-def _spread_codec_input(df: DataFrame, key_col: str = "doc_id") -> DataFrame:
-    """Spread before a per-row Python codec stage (guide §2.5 + §4: a
-    one-file corpus runs the ``mapInPandas`` single-threaded).  Thin
-    alias of :func:`..operators.layout.spread_input` -- see THAT
-    docstring for the canonical rationale and the no-op-at-scale
-    auto-detect (r11 ADVICE: one copy of the rationale, not three)."""
-    from ..operators.layout import spread_input
-
-    return spread_input(df, key_col)
-
+from ..operators.layout import spread_input
 
 MEDIA_SCHEMA = StructType(
     [
@@ -611,7 +602,7 @@ def attach_jpeg_payload(
     # Spread: the FDCT + Huffman encoder is the one measured-heavy
     # in-container codec (3.35 s single-threaded vs 1.29 s spread at
     # sf0.1); the decode stage downstream inherits the partitioning.
-    return _spread_codec_input(docs.select("doc_id", text_col)).mapInPandas(
+    return spread_input(docs.select("doc_id", text_col), "doc_id").mapInPandas(
         run, MEDIA_SCHEMA
     )
 

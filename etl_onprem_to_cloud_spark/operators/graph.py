@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .layout import spread_input
+
 SCALE = 10**9
 
 
@@ -126,20 +128,6 @@ def duck_pagerank_sql(
     )
 
 
-def spread_pairs_input(df, key_col: str):
-    """Spread before CPU-heavy pair generation (guide §2.5: the
-    bench-scale single-row-group inputs run the self-join's pair
-    emission in ONE task).  Thin alias of
-    :func:`..operators.layout.spread_input` -- see THAT docstring for
-    the canonical rationale and the no-op-at-scale auto-detect (r11
-    ADVICE: one copy of the rationale).  Hash-partitioning on the join
-    key additionally co-partitions both self-join sides through one
-    shared (reused) exchange."""
-    from .layout import spread_input
-
-    return spread_input(df, key_col)
-
-
 def copurchase_edges(lineitem, min_support: int = 2, weight: bool = False):
     """Support-thresholded part co-purchase edge list (x < y), the
     shared substrate of the support-2 graph queries (LPA, Adamic-Adar,
@@ -157,7 +145,7 @@ def copurchase_edges(lineitem, min_support: int = 2, weight: bool = False):
     """
     from pyspark.sql import functions as F
 
-    li = spread_pairs_input(
+    li = spread_input(
         lineitem.select("l_orderkey", "l_partkey"), "l_orderkey"
     )
     a = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pa"))

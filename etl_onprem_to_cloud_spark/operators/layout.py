@@ -29,12 +29,12 @@ def spread_input(df: DataFrame, key_col: str) -> DataFrame:
     before a CPU-heavy map/explode stage (r10 optimization, guide §2.5
     "input skew": one compact file -> one scan task that no core count
     can split, because parquet scans are row-group-atomic).  The
-    canonical form of the auto-detect idiom used by
-    ``llm/dedup._exploded_shingles``, ``operators/graph.
-    spread_pairs_input`` and ``llm/multimodal._spread_codec_input``:
-    well-partitioned inputs -- the 100 TB case -- skip the shuffle
-    entirely, so nothing here is tuned to local mode.  Hashing on a
-    stable key keeps the spread deterministic under retries.
+    canonical form of the auto-detect idiom also inlined in
+    ``llm/dedup._exploded_shingles``: well-partitioned inputs -- the
+    100 TB case -- skip the shuffle entirely, so nothing here is tuned
+    to local mode.  Hashing on a stable key keeps the spread
+    deterministic under retries; hashing on a self-join's key also
+    lets both join sides share the one (reused) exchange.
 
     Cost note (r11 ADVICE): ``df.rdd.getNumPartitions()`` forces a
     full non-AQE physical planning of the input subtree at query-BUILD
@@ -66,10 +66,10 @@ def ckpt_partitioned(
     physical plan is an ``AdaptiveSparkPlanExec`` whose partitioning
     reports ``UnknownPartitioning`` -- so the checkpoint forgets its
     layout and EnsureRequirements re-inserts an edge-wide Exchange in
-    every consumer (measured in scripts/exp_ckpt_partitioning.py:
-    3 exchanges with a plain checkpoint, 2 with this helper; the
-    surviving ones are the changing small side + the downstream
-    rollup).  Planning this one repartition-then-checkpoint with AQE
+    every consumer (``tests/test_plans.py::
+    test_ckpt_partitioned_skips_exchange_on_checkpointed_side`` pins
+    this: the plain checkpoint side is re-shuffled, this helper's is
+    not).  Planning this one repartition-then-checkpoint with AQE
     momentarily OFF makes the stored ``hashpartitioning(key, n)``
     stick, so per-round joins shuffle only the side that changed.
     The AQE loss is confined to the trivial plan built here (a scan +

@@ -9,7 +9,7 @@ the shared long-lived session and hold executor memory indefinitely.
 
 ``pin(df)`` is ``df.persist()`` plus registration; harnesses call
 ``release_pinned()`` after materializing each query's result (bench.py,
-scale_rehearsal, check_query, and the test suite all do).  Releasing is
+the scripts/ tools, perfbench, and the test suite all do).  Releasing is
 safe at any point after the action that populated the cache -- Spark
 unpersist is non-blocking by default and recomputation is always
 possible, so a missed release costs memory, never correctness.

@@ -24,7 +24,7 @@ from pyspark.storagelevel import StorageLevel
 
 from ..functions.numeric import dec, portable_round
 from ..operators import ranks as RK
-from ..operators.layout import ckpt_partitioned
+from ..operators.layout import ckpt_partitioned, spread_input
 from ..operators.sampling import duck_hash_gate, hash_gate
 from ..pinned import pin
 from ..functions.text import tokens
@@ -177,8 +177,6 @@ def q_textrank_tokens(spark, sf_dir):
     Vocabulary nodes are the unit of work -- a real corpus has ~1e7
     nodes and ~1e9 edges, well inside this plan's shape (same pattern
     as connected components in llm/dedup.py)."""
-    from ..operators.layout import spread_input
-
     docs = spread_input(cat(spark, sf_dir).documents, "doc_id")
     toks = docs.select(tokens(F.lower(F.col("text"))).alias("toks"))
     pairs = toks.select(
@@ -923,17 +921,6 @@ def q_triangle_clustering(spark, sf_dir):
 # k-core decomposition (iterative peeling)
 # --------------------------------------------------------------------------
 
-def _node_build(df):
-    """Join-strategy marker for the node-sized build side of a
-    per-round iterative join (labels / frontier / keep sets):
-    ``shuffle_hash`` (r10) -- the side derives from a corpus-scaled
-    subtree so it must never be FORCED to broadcast, but its
-    per-partition hash build is bounded by the node set.  One
-    definition so probe scripts can A/B the strategy by
-    monkeypatching (the llm/dedup._node_build twin)."""
-    return df.hint("shuffle_hash")
-
-
 _KCORE_K, _KCORE_ROUNDS = 65, 6
 
 # Co-purchase graph: parts appearing in the same order.  (The token
@@ -1018,9 +1005,7 @@ def q_kcore_copurchase(spark, sf_dir):
     unchanged = fixpoint -> remaining rounds are the identity).  At
     100 TB the peeling loop runs the same per-round plan until that
     fixpoint."""
-    from ..operators.graph import spread_pairs_input
-
-    li = spread_pairs_input(
+    li = spread_input(
         cat(spark, sf_dir).lineitem.select("l_orderkey", "l_partkey"),
         "l_orderkey",
     )
@@ -1042,10 +1027,12 @@ def q_kcore_copurchase(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("deg"))
         )
         keep = deg.filter(F.col("deg") >= _KCORE_K).select("node")
-        # shuffle_hash RESTORED (r11, three-scale A/B with
-        # scripts/ab_kcore_sf10_r11.py): dropping the hint for AQE's
-        # runtime choice read 0.6-0.8 s faster at sf0.1 and a wash at
-        # sf10 (13.5 vs 14.0 interleaved), but at sf100 -- fresh JVM
+        # shuffle_hash RESTORED (r11, three-scale A/B recorded in
+        # PROBES_r11.json and OPTIMIZATION_r11.md; ``scripts/ab.py
+        # --leg base --leg nohint`` re-runs it with every hint off):
+        # dropping the hint for AQE's runtime choice read 0.6-0.8 s
+        # faster at sf0.1 and a wash at sf10 (13.5 vs 14.0
+        # interleaved), but at sf100 -- fresh JVM
         # per leg, the standing one-JVM-per-query methodology -- the
         # no-hint leg cost +17% (161.0 vs 137.3 s; the densified edge
         # stream pays per-round sort/strategy overhead once its
@@ -3092,14 +3079,12 @@ def q_modularity_brand_copurchase(spark, sf_dir):
     CORPUS-SCALED part projection, so its joins carry no broadcast
     hint (estimator/AQE broadcasts at test SFs, falls back to shuffle
     at 100x); the rest is three scalar aggregates."""
-    from ..operators.graph import spread_pairs_input
-
     c = cat(spark, sf_dir)
     # r11: the one co-purchase edge build that still ran its pair
     # emission in the single scan task (k-core/BFS/copurchase_edges
     # gained the spread in r10; this inline build was missed).  Same
     # no-op-at-scale auto-detect (layout.spread_input).
-    li = spread_pairs_input(
+    li = spread_input(
         c.lineitem.select("l_orderkey", "l_partkey"), "l_orderkey"
     )
     a = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pa"))
@@ -3394,11 +3379,9 @@ def q_lpa_communities(spark, sf_dir):
         # bounded per-partition hash map.
         votes = (
             und.join(
-                _node_build(
-                    labels.select(
-                        F.col("node").alias("nb"), F.col("lbl").alias("nlbl")
-                    )
-                ),
+                labels.select(
+                    F.col("node").alias("nb"), F.col("lbl").alias("nlbl")
+                ).hint("shuffle_hash"),
                 "nb",
             )
             .groupBy("node", "nlbl")
@@ -3635,9 +3618,7 @@ def q_bfs_hops_from_hubs(spark, sf_dir):
     past the diameter -- the fixed unrolling stays deterministic.
     Lineage is cut every round (measured faster than the k-core
     every-other cadence; see the inline comment)."""
-    from ..operators.graph import spread_pairs_input
-
-    li = spread_pairs_input(
+    li = spread_input(
         cat(spark, sf_dir).lineitem.select("l_orderkey", "l_partkey"),
         "l_orderkey",
     )
@@ -3704,7 +3685,7 @@ def q_bfs_hops_from_hubs(spark, sf_dir):
         # shuffle_hash on the node-sized frontier (r10): sort-merge
         # re-sorted the full und stream every round.
         expanded = hops.unionAll(
-            _node_build(frontier).join(und, "node").select(
+            frontier.hint("shuffle_hash").join(und, "node").select(
                 F.col("nb").alias("node"), F.lit(i).alias("hop")
             )
         )
@@ -4087,7 +4068,7 @@ def q_bellman_ford_cheapest(spark, sf_dir):
     for i in range(1, _BF_ROUNDS + 1):
         # shuffle_hash on the node-sized frontier (r10, the BFS/LPA
         # rationale): no per-round sort of the und stream.
-        cand = _node_build(frontier).join(und, "node").select(
+        cand = frontier.hint("shuffle_hash").join(und, "node").select(
             F.col("nb").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
         )
         new = (

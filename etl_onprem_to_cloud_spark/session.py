@@ -135,10 +135,11 @@ def get_spark(
     measured sweet spot: at 16g the same sf0.1 MinHash-LSH plan runs
     2.3x slower (1.65s -> 3.8s warm; G1 region/young-gen scaling
     dominates the short-task GC profile), while 4g/8g match the
-    pre-sizing timings and still clear every bench query.  The sf1
-    rehearsal overrides to 16g via SPARK_GRAFT_DRIVER_MEM (see
-    scripts/scale_rehearsal.py).  On a real cluster this knob is inert
-    (driver memory comes from spark-submit).
+    pre-sizing timings and still clear every bench query.  Scale
+    probes over derived data override it via SPARK_GRAFT_DRIVER_MEM
+    (16g at sf1, 48g at sf100; README scale sections, scripts/probe.py).
+    On a real cluster this knob is inert (driver memory comes from
+    spark-submit).
     """
     if "PYSPARK_SUBMIT_ARGS" not in os.environ:
         driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")

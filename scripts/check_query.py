@@ -1,99 +1,94 @@
 #!/usr/bin/env python
-"""Dev loop: run one registered query against its DuckDB oracle and
-print the first mismatch (same comparison as tests/test_oracle_parity).
+"""Dev loop: run one registered query at one or more fixture dirs, print
+its result hash, and compare it with its DuckDB oracle (first mismatch
+printed).  The comparison rules are imported from
+tests/test_oracle_parity.py, so there is one copy of them.
 
-    python scripts/check_query.py q_text_stats [sf_dir]
+    python scripts/check_query.py q_text_stats [sf_dir ...]
+
+The hash (md5 over the sorted column names and the normalized sorted
+rows) is the before/after bit-identical gate for implementation
+rewrites.  The default dir is the fixture the test suite reads.
+Exit 1 on any mismatch.
 """
 
 from __future__ import annotations
 
-import math
+import hashlib
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [ROOT, os.path.join(ROOT, "tests")]
 
 import duckdb  # noqa: E402
+from conftest import SF_DIR  # noqa: E402
+from test_oracle_parity import _normalize, _values_equal  # noqa: E402
 
+from etl_onprem_to_cloud_spark.pinned import release_pinned  # noqa: E402
 from etl_onprem_to_cloud_spark.queries import QUERIES  # noqa: E402
 from etl_onprem_to_cloud_spark.schemas import FIXTURE_TABLES  # noqa: E402
 from etl_onprem_to_cloud_spark.session import get_spark  # noqa: E402
 
 
-def normalize(rows, columns):
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-
-    def key(v):
-        if v is None:
-            return (0, "")
-        if isinstance(v, float):
-            return (1, "nan") if math.isnan(v) else (1, repr(v))
-        return (1, str(v))
-
-    out = [tuple(r[i] for i in order) for r in rows]
-    return sorted(out, key=lambda r: [key(v) for v in r]), [columns[i] for i in order]
+def result_hash(rows, columns) -> str:
+    norm, cols = _normalize(rows, columns)
+    h = hashlib.md5()
+    h.update(repr(cols).encode())
+    for r in norm:
+        h.update(repr(r).encode())
+    return h.hexdigest()
 
 
-def values_equal(a, b):
-    if a is None or b is None:
-        return a is None and b is None
-    if isinstance(a, float) or isinstance(b, float):
-        if not (isinstance(a, float) and isinstance(b, float)):
-            return False
-        if math.isnan(a) and math.isnan(b):
-            return True
-        return a == b
-    return a == b
+def oracle_mismatch(sf_dir: str, sql: str, rows, columns) -> str | None:
+    """None when ``rows`` match the oracle ``sql`` over ``sf_dir``, else
+    a description of the first difference."""
+    con = duckdb.connect()
+    try:
+        for t in FIXTURE_TABLES:
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+            )
+        o = con.execute(sql)
+        o_cols = [d[0] for d in o.description]
+        o_rows = o.fetchall()
+    finally:
+        con.close()
+    if sorted(columns) != sorted(o_cols):
+        return f"COLUMN MISMATCH spark={sorted(columns)} oracle={sorted(o_cols)}"
+    if len(rows) != len(o_rows):
+        return f"ROW COUNT MISMATCH spark={len(rows)} oracle={len(o_rows)}"
+    s_norm, cols = _normalize(rows, columns)
+    o_norm, _ = _normalize(o_rows, o_cols)
+    for i, (sr, orow) in enumerate(zip(s_norm, o_norm)):
+        for c, sv, ov in zip(cols, sr, orow):
+            if not _values_equal(sv, ov):
+                return f"row {i} col {c}: spark={sv!r} oracle={ov!r}"
+    return None
 
 
 def main() -> int:
-    names = sys.argv[1:2]
-    if not names:
-        print("usage: check_query.py <name> [sf_dir]")
+    if len(sys.argv) < 2:
+        print("usage: check_query.py <name> [sf_dir ...]")
         return 2
-    name = names[0]
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.001"
+    name, sf_dirs = sys.argv[1], sys.argv[2:] or [SF_DIR]
     spec = QUERIES[name]
-
     spark = get_spark(app_name="check-query")
     spark.sparkContext.setLogLevel("ERROR")
-    sdf = spec.fn(spark, sf_dir)
-    s_cols, s_rows = sdf.columns, [tuple(r) for r in sdf.collect()]
-    from etl_onprem_to_cloud_spark.pinned import release_pinned
-
-    release_pinned()
-
-    if spec.oracle is None:
-        print(f"{name}: rows-only query, {len(s_rows)} rows, cols={s_cols}")
-        return 0
-
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    o = con.execute(spec.oracle)
-    o_cols = [d[0] for d in o.description]
-    o_rows = o.fetchall()
-
-    if sorted(s_cols) != sorted(o_cols):
-        print(f"COLUMN MISMATCH spark={sorted(s_cols)} oracle={sorted(o_cols)}")
-        return 1
-    if len(s_rows) != len(o_rows):
-        print(f"ROW COUNT MISMATCH spark={len(s_rows)} oracle={len(o_rows)}")
-        return 1
-    s_norm, cols = normalize(s_rows, s_cols)
-    o_norm, _ = normalize(o_rows, o_cols)
-    bad = 0
-    for i, (sr, orow) in enumerate(zip(s_norm, o_norm)):
-        for c, (sv, ov) in zip(cols, zip(sr, orow)):
-            if not values_equal(sv, ov):
-                print(f"row {i} col {c}: spark={sv!r} oracle={ov!r}")
-                bad += 1
-                if bad >= 10:
-                    return 1
-    print(f"{name}: OK ({len(s_rows)} rows)" if not bad else f"{name}: {bad} mismatches")
-    return 1 if bad else 0
+    failed = False
+    for sf_dir in sf_dirs:
+        sdf = spec.fn(spark, sf_dir)
+        cols, rows = sdf.columns, [tuple(r) for r in sdf.collect()]
+        release_pinned()
+        print(f"{name} {sf_dir} rows={len(rows)} hash={result_hash(rows, cols)}")
+        if spec.oracle is None:
+            print(f"{name}: rows-only query, cols={cols}")
+            continue
+        bad = oracle_mismatch(sf_dir, spec.oracle, rows, cols)
+        print(f"{name}: {bad}" if bad else f"{name}: OK ({len(rows)} rows)")
+        failed |= bad is not None
+    spark.stop()
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":

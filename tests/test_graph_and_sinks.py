@@ -427,11 +427,10 @@ def test_count_carry_respects_caller_persisted_cand(spark):
         pre.unpersist()
 
 
-def test_containment_fanout_env_override(spark, monkeypatch):
-    """SPARK_GRAFT_CONTAINMENT_FANOUT is the probe-only knob behind the
-    sf100 matched-per-partition-n experiment (VERDICT r7 item 1): it
-    must scale the incidence repartition width, keep values identical,
-    and default to the byte-identical 4x shape when unset."""
+def test_containment_fanout_is_4x_parallelism(spark):
+    """The incidence repartition width is pinned at 4 x the default
+    parallelism: each partition's incidences are buffered in one Python
+    worker, so the width is that worker's memory bound."""
     import re
 
     from etl_onprem_to_cloud_spark.llm.dedup import containment_pairs
@@ -441,29 +440,9 @@ def test_containment_fanout_env_override(spark, monkeypatch):
     docs = spark.createDataFrame(
         [(1, " ".join(w[:12])), (2, " ".join(w[:10]))], ["doc_id", "text"]
     )
-    par = spark.sparkContext.defaultParallelism
-
-    def fanout_width(df):
-        m = re.findall(
-            r"hashpartitioning\(id_a#\d+L?, id_b#\d+L?, (\d+)\)",
-            explain_str(df, "simple"),
-        )
-        assert m, "incidence pair-key repartition missing from plan"
-        return {int(x) for x in m}
-
-    base = containment_pairs(docs, threshold=0.8)
-    assert fanout_width(base) == {4 * par}
-
-    monkeypatch.setenv("SPARK_GRAFT_CONTAINMENT_FANOUT", "8")
-    wide = containment_pairs(docs, threshold=0.8)
-    assert fanout_width(wide) == {8 * par}
-    assert sorted(map(tuple, wide.collect())) == sorted(
-        map(tuple, base.collect())
+    widths = re.findall(
+        r"hashpartitioning\(id_a#\d+L?, id_b#\d+L?, (\d+)\)",
+        explain_str(containment_pairs(docs, threshold=0.8), "simple"),
     )
-
-    # Defensive parse (ADVICE r8): garbage or <1 values -- a dead
-    # probe's leftover env, a typo -- clamp to the production 4x
-    # instead of raising ValueError / repartition(<=0).
-    for bad in ("garbage", "0", "-3"):
-        monkeypatch.setenv("SPARK_GRAFT_CONTAINMENT_FANOUT", bad)
-        assert fanout_width(containment_pairs(docs, threshold=0.8)) == {4 * par}
+    assert widths, "incidence pair-key repartition missing from plan"
+    assert {int(x) for x in widths} == {4 * spark.sparkContext.defaultParallelism}

@@ -785,7 +785,7 @@ def test_png_decode_is_arrow_batched_map_only(spark, sf_dir):
     ("q_wilson_ctr_ranking", 4),
     # modularity: edge build (exchange-reused) + degree/brand rollups
     # + scalar joins; the static count includes each reuse.  12 -> 15
-    # (r11): the edge build gained the spread_pairs_input repartition
+    # (r11): the edge build gained the layout.spread_input repartition
     # (A/B 1.60 vs 2.30 s; no-op at scale), whose ONE exchange prints
     # once per edge-build consumer (intra / degree / m) in the
     # unexecuted plan -- same per-reuse reprint the CF note above
@@ -1362,3 +1362,59 @@ def test_unresolved_leaf_observability(spark, sf_dir):
         assert C.unresolved_corpus_leaves(local) != []
     finally:
         C._BENIGN_LEAVES = orig
+
+
+def _path_to_checkpoint_scan(node):
+    """Node names from ``node`` down to the first checkpoint scan
+    (``Scan ExistingRDD``), descending through AQE's stage wrappers."""
+    name = node.nodeName()
+    if "ExistingRDD" in name:
+        return [name]
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        kids = [node.executedPlan()]
+    elif cls.endswith("QueryStageExec"):
+        kids = [node.plan()]
+    else:
+        it = node.children().iterator()
+        kids = []
+        while it.hasNext():
+            kids.append(it.next())
+    for kid in kids:
+        path = _path_to_checkpoint_scan(kid)
+        if path is not None:
+            return [name, *path]
+    return None
+
+
+def test_ckpt_partitioned_skips_exchange_on_checkpointed_side(spark):
+    """``layout.ckpt_partitioned`` stores its hash layout where the
+    planner can see it: a join on the key streams the checkpoint with
+    no Exchange, while a plain localCheckpoint (which under AQE forgets
+    its layout) is re-shuffled.  The iterative graph loops rely on this
+    to shuffle only their changing side each round.  The helper must
+    leave the session's AQE setting as it found it."""
+    from pyspark.sql import functions as F
+
+    from etl_onprem_to_cloud_spark.operators.layout import ckpt_partitioned
+
+    edges = spark.range(0, 2000).select(
+        F.col("id").alias("src"), (F.col("id") % 100).alias("dst")
+    )
+    labels = spark.range(0, 100).select(
+        F.col("id").alias("node"), F.col("id").alias("component")
+    )
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    partitioned = ckpt_partitioned(edges, "dst")
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
+    plain = edges.localCheckpoint(eager=True)
+
+    def checkpoint_side(e):
+        j = e.join(labels.hint("shuffle_hash"), e.dst == labels.node)
+        assert len(j.collect()) == 2000
+        path = _path_to_checkpoint_scan(j._jdf.queryExecution().executedPlan())
+        assert path is not None and "ShuffledHashJoin" in path, path
+        return path[path.index("ShuffledHashJoin"):]
+
+    assert not any("Exchange" in n for n in checkpoint_side(partitioned))
+    assert any("Exchange" in n for n in checkpoint_side(plain))
