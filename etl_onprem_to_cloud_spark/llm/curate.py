@@ -16,14 +16,18 @@ because a pushdown-inlined in-row filter re-evaluates the gram
 construction per array element (measured 17s vs ~1s at sf0.1 -- see
 q_training_data_pipeline's docstring); the split write is
 ``partitionBy("split")`` so downstream readers partition-prune to
-their fold.
+their fold.  The facade runs the DAG once, in that write, and caches
+nothing: the manifest aggregates the corpus read back with its known
+schema, is collected once, and returns as a local relation.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions import text as T
 from ..operators.datamix import split_assignment
@@ -114,47 +118,34 @@ def run_curation_pipeline(
     ``manifest_out``: the (split, source) manifest as parquet.
     Either sink may be None (report-only / corpus-only runs).
 
-    ``CurationResult.kept``: when ``corpus_out`` was written, this is
-    the written corpus read back (already materialized -- consuming
-    it costs a parquet scan, not a curation re-run).  With no
-    ``corpus_out`` there is nothing durable to read back, so ``kept``
-    is the lazy curation DataFrame and RECOMPUTES the DAG on first
-    action -- pass ``corpus_out`` if you intend to consume the rows.
+    The corpus write is the only run of the curation DAG; ``kept`` is
+    then the written corpus read back with the curated schema, so an
+    empty corpus reads as zero rows.  With no ``corpus_out`` there is
+    nothing to read back: ``kept`` is the lazy curation DataFrame, and
+    the manifest and each action on ``kept`` replay the DAG.
+
+    The manifest is computed and collected once.  ``manifest`` is a
+    local relation over those rows: consuming it runs no job, and the
+    manifest sink is written from it.
     """
-    # The curation DAG (exploded 2-gram aggregation + joins) is the
-    # dominant cost; without the persist it would recompute for the
-    # corpus write, the manifest write, and the count.  One pass
-    # materializes it; rows_kept folds out of the manifest for free.
-    curated = curated_docs(docs).persist()
-    try:
-        manifest = curation_manifest(curated)
-        if corpus_out:
-            curated.write.mode("overwrite").partitionBy("split").parquet(
-                corpus_out
-            )
-        manifest_rows = manifest.collect()
-        if manifest_out:
-            manifest.write.mode("overwrite").parquet(manifest_out)
-        # Return the manifest re-materialized from its collected rows
-        # (it is a per-(split, source) rollup -- tiny by construction)
-        # so callers can show()/join it after the unpersist below
-        # without re-running the curation DAG.  `kept` likewise must
-        # survive the unpersist: prefer the corpus just written (a
-        # parquet scan, still split-partition-prunable) over the lazy
-        # DAG, which would silently replay dedup + gate + split on
-        # the caller's first action.
-        kept = (
-            docs.sparkSession.read.parquet(corpus_out)
-            if corpus_out
-            else curated
-        )
-        return CurationResult(
-            kept=kept,
-            manifest=docs.sparkSession.createDataFrame(
-                manifest_rows, manifest.schema
-            ),
-            rows_in=docs.count(),
-            rows_kept=sum(r["n_docs"] for r in manifest_rows),
-        )
-    finally:
-        curated.unpersist()
+    spark = docs.sparkSession
+    curated = curated_docs(docs)
+    kept = curated
+    if corpus_out:
+        curated.write.mode("overwrite").partitionBy("split").parquet(corpus_out)
+        # The explicit schema keeps the curated types and reads a corpus
+        # with no data files; the select pins the curated column order.
+        reader = spark.read.schema(curated.schema)
+        kept = reader.parquet(corpus_out).select(*curated.columns)
+    manifest = curation_manifest(kept)
+    rows = [r.asDict() for r in manifest.collect()]
+    arrow = pa.Table.from_pylist(rows, schema=to_arrow_schema(manifest.schema))
+    manifest = spark.createDataFrame(arrow, manifest.schema)
+    if manifest_out:
+        manifest.write.mode("overwrite").parquet(manifest_out)
+    return CurationResult(
+        kept=kept,
+        manifest=manifest,
+        rows_in=docs.count(),
+        rows_kept=sum(r["n_docs"] for r in rows),
+    )

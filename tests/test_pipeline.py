@@ -168,21 +168,49 @@ def test_pipeline_empty_dir(spark, tmp_path):
         run_netflix_pipeline(spark, str(empty))
 
 
-def test_curation_pipeline_writes_partitioned_corpus(spark, sf_dir, tmp_path):
+def _documents(spark, sf_dir):
+    from etl_onprem_to_cloud_spark.sources.io import read_parquet
+
+    return read_parquet(spark, f"{sf_dir}/documents.parquet")
+
+
+@pytest.mark.parametrize(
+    "corpus, manifest",
+    [(True, True), (True, False), (False, True), (False, False)],
+    ids=["corpus+manifest", "corpus", "manifest", "no-sink"],
+)
+def test_curation_pipeline_writes_partitioned_corpus(
+    spark, sf_dir, tmp_path, corpus, manifest
+):
     """Operational facade: the curated corpus lands as split-partitioned
     parquet (readers partition-prune to their fold), the manifest
     matches the oracle-checked q_training_data_pipeline rollup, and the
-    written rows reconcile with the returned counts."""
+    written rows reconcile with the returned counts -- with either sink,
+    both, or neither."""
     from etl_onprem_to_cloud_spark.llm.curate import run_curation_pipeline
     from etl_onprem_to_cloud_spark.queries import QUERIES
-    from etl_onprem_to_cloud_spark.sources.io import read_parquet
 
-    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
-    corpus_out = str(tmp_path / "corpus")
-    manifest_out = str(tmp_path / "manifest")
+    docs = _documents(spark, sf_dir)
+    corpus_out = str(tmp_path / "corpus") if corpus else None
+    manifest_out = str(tmp_path / "manifest") if manifest else None
     res = run_curation_pipeline(docs, corpus_out, manifest_out)
     assert res.rows_in == docs.count()
     assert 0 < res.rows_kept <= res.rows_in
+
+    # manifest == the oracle-checked query rollup, value for value
+    want = sorted(
+        tuple(r)
+        for r in QUERIES["q_training_data_pipeline"].fn(spark, sf_dir).collect()
+    )
+    rows = res.manifest.collect()
+    assert sorted(tuple(r) for r in rows) == want
+    assert res.rows_kept == sum(r["n_docs"] for r in rows)
+    assert res.kept.count() == res.rows_kept
+    if manifest:
+        got = sorted(tuple(r) for r in spark.read.parquet(manifest_out).collect())
+        assert got == want
+    if not corpus:
+        return
 
     back = spark.read.parquet(corpus_out)
     assert back.count() == res.rows_kept
@@ -199,10 +227,72 @@ def test_curation_pipeline_writes_partitioned_corpus(spark, sf_dir, tmp_path):
     # renders as `PartitionFilters: [isnotnull(split#N), (split#N = train)]`
     assert re.search(r"PartitionFilters: \[[^\]]*= train", plan), plan
 
-    # manifest == the driver-green query rollup, value for value
-    want = sorted(
-        tuple(r)
-        for r in QUERIES["q_training_data_pipeline"].fn(spark, sf_dir).collect()
+
+def test_curation_pipeline_empty_corpus(spark, sf_dir, tmp_path):
+    """A run that keeps no docs writes both sinks empty, and the corpus
+    reads back as zero rows instead of failing schema inference."""
+    from etl_onprem_to_cloud_spark.llm.curate import run_curation_pipeline
+
+    manifest_out = str(tmp_path / "manifest")
+    res = run_curation_pipeline(
+        _documents(spark, sf_dir).limit(0), str(tmp_path / "corpus"), manifest_out
     )
-    got = sorted(tuple(r) for r in spark.read.parquet(manifest_out).collect())
-    assert got == want
+    assert res.rows_in == res.rows_kept == 0
+    assert res.kept.count() == 0
+    back = spark.read.parquet(manifest_out)
+    assert back.count() == 0
+    assert back.schema.simpleString() == res.manifest.schema.simpleString()
+
+
+def _group_plans(spark, group, recent=100):
+    """Physical plans of the SQL executions, among the ``recent`` last
+    ones, that ran a job of ``group``."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    it = store.executionsList(max(0, n - recent), recent).iterator()
+    plans = []
+    while it.hasNext():
+        e = it.next()
+        if any(e.jobs().contains(j) for j in jobs):
+            plans.append(e.physicalPlanDescription())
+    return plans
+
+
+def test_curation_pipeline_runs_dag_once(spark, sf_dir, tmp_path):
+    """With both sinks the corpus write is the one run of the curation
+    DAG: nothing is cached, the build stays within its job budget, and
+    the returned manifest is a local relation whose collect() runs no
+    job."""
+    from etl_onprem_to_cloud_spark.llm.curate import run_curation_pipeline
+
+    docs = _documents(spark, sf_dir)
+    sc = spark.sparkContext
+    group = "test_curation_pipeline_runs_dag_once"
+    sc.setJobGroup(group, group)
+    try:
+        res = run_curation_pipeline(
+            docs, str(tmp_path / "corpus"), str(tmp_path / "manifest")
+        )
+    finally:
+        sc.setJobGroup(None, None)
+    # 13 at sf0.001; caching the corpus, or computing the manifest again
+    # for its sink, costs more.
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 14
+
+    plans = _group_plans(spark, group)
+    assert any("n_docs" in p for p in plans), plans
+    assert not any("InMemoryTableScan" in p for p in plans), plans
+
+    plan = res.manifest._jdf.queryExecution().executedPlan().toString()
+    assert plan.startswith("LocalTableScan"), plan
+    group = "test_curation_pipeline_runs_dag_once:collect"
+    sc.setJobGroup(group, group)
+    try:
+        rows = res.manifest.collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert sum(r["n_docs"] for r in rows) == res.rows_kept
