@@ -62,12 +62,12 @@ def main(argv: list[str] | None = None) -> int:
 
         from .llm.curate import run_curation_pipeline
         from .session import get_spark
-        from .sources.io import read_parquet
+        from .sources.io import load_table
 
         preexisting = SparkSession.getActiveSession() is not None
         spark = get_spark(app_name="cli-curate")
         spark.sparkContext.setLogLevel("ERROR")
-        docs = read_parquet(spark, os.path.join(args.sf_dir, "documents.parquet"))
+        docs = load_table(spark, args.sf_dir, "documents")
         res = run_curation_pipeline(
             docs,
             corpus_out=os.path.join(args.out, "corpus"),

@@ -56,10 +56,9 @@ NETFLIX_CLEAN = _st(
     ("genre_group", StringType()),
 )
 
-# --- Driver fixture tables (/root/testdata/sf*/, TESTDATA.md).
-# Timestamps in the fixtures are parquet TIMESTAMP_NTZ (micros) except
-# events.ts which is TIMESTAMP(NANOS) -> read as long, converted by
-# sources.load_table.
+# --- Driver fixture tables (TESTDATA.md), read by sources.load_table.
+# Every timestamp is parquet TIMESTAMP(MICROS, isAdjustedToUTC=false),
+# which Spark reads as TIMESTAMP_NTZ.
 REGION = _st(("r_regionkey", IntegerType()), ("r_name", StringType()))
 NATION = _st(
     ("n_nationkey", IntegerType()),
@@ -110,7 +109,7 @@ LINEITEM = _st(
 )
 EVENTS = _st(
     ("event_id", LongType()),
-    ("ts", TimestampNTZType()),  # after sources.load_table ns->us conversion
+    ("ts", TimestampNTZType()),
     ("user_id", LongType()),
     ("event_type", StringType()),
     ("value", DoubleType()),

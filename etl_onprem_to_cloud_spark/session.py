@@ -86,9 +86,6 @@ def build_conf(
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         # Deterministic timestamps (oracle parity with DuckDB naive ts).
         "spark.sql.session.timeZone": "UTC",
-        # The driver-generated events.parquet stores TIMESTAMP(NANOS);
-        # Spark has no nanos type -> read as long, sources.py converts.
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
         # Arrow for any pandas-UDF path (Ring C) and toPandas.
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         # Dim tables stay broadcast well past sf0.1.

@@ -15,15 +15,16 @@ Covers the reference's IO surface (SURVEY.md section 2a S1-S6):
   ``sorted([f for f in listdir if f.endswith('.csv')])[-1]``,
   reference etl/extract.py:10-17).
 
-Plus :func:`load_table` / :class:`Catalog` for the driver fixture tables.
+Plus :func:`load_table`, the one reader of the driver fixture tables
+(declared schemas, no inference), and :class:`Catalog` over it.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import LongType, StructType
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..schemas import FIXTURE_TABLES
 
@@ -185,64 +186,45 @@ def latest_file(directory: str, suffix: str = ".csv") -> str | None:
     return os.path.join(directory, names[-1])
 
 
-# DataFrames are immutable plan templates, so one spark.read per
-# (session, dir, table) is enough; re-reading costs a driver-side file
-# listing + schema fetch (~0.1 s) per call, which dominated warm query
-# latency for 6-table joins.  Keyed by applicationId so a restarted
-# session cannot see stale plans.
+# One DataFrame per (session, dir, table): DataFrames are immutable
+# plan templates, and even a declared-schema read lists the file on the
+# driver (median 15-24 ms warm at sf0.01 on a 4-core box), which a
+# 6-table query build would otherwise pay on every build.  Keyed by
+# applicationId so a restarted session cannot see stale plans.
 _TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver fixture table, normalizing types.
-
-    events.ts is parquet TIMESTAMP(NANOS); Spark reads it as a long (via
-    ``spark.sql.legacy.parquet.nanosAsLong``) and we convert here with an
-    exact integer div (a double division would lose precision at 1.7e18 ns).
-    """
+    """Load one driver fixture table with its declared schema
+    (:data:`~..schemas.FIXTURE_TABLES`), so no schema-inference job runs.
+    The one reader of fixture tables; raises ``KeyError`` for a name
+    that is not one."""
     key = (spark.sparkContext.applicationId, sf_dir, name)
     cached = _TABLE_CACHE.get(key)
     if cached is not None:
         return cached
-    # Self-configure sessions we did not build (e.g. a test harness
-    # passing a vanilla SparkSession): without nanosAsLong the
-    # TIMESTAMP(NANOS) events file is unreadable, and a non-UTC session
-    # time zone would shift every formatted timestamp.  Both confs are
-    # runtime-settable.
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    except Exception:  # pragma: no cover - conf may be frozen; proceed
-        pass
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
-        df = df.withColumn(
-            "ts",
-            F.expr("timestamp_micros(ts div 1000)").cast("timestamp_ntz"),
-        )
+    schema = FIXTURE_TABLES[name]
+    # A non-UTC session time zone would shift every formatted timestamp.
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    df = spark.read.schema(schema).parquet(os.path.join(sf_dir, f"{name}.parquet"))
     _TABLE_CACHE[key] = df
     return df
 
 
 class Catalog:
-    """Lazy per-session view of the fixture tables, also registered as
+    """Per-session view of the fixture tables, optionally registered as
     temp views so ``spark.sql`` works over them."""
 
     def __init__(self, spark: SparkSession, sf_dir: str, register_views: bool = False):
         self.spark = spark
         self.sf_dir = sf_dir
-        self._cache: dict[str, DataFrame] = {}
         self._register = register_views
 
     def table(self, name: str) -> DataFrame:
-        if name not in self._cache:
-            if name not in FIXTURE_TABLES:
-                raise KeyError(f"unknown fixture table: {name}")
-            df = load_table(self.spark, self.sf_dir, name)
-            if self._register:
-                df.createOrReplaceTempView(name)
-            self._cache[name] = df
-        return self._cache[name]
+        df = load_table(self.spark, self.sf_dir, name)
+        if self._register:
+            df.createOrReplaceTempView(name)
+        return df
 
     def __getattr__(self, name: str) -> DataFrame:
         if name in FIXTURE_TABLES:

@@ -17,26 +17,24 @@ against the DataFrame implementations).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import SparkSession
 
 from .schemas import FIXTURE_TABLES
+from .sources.io import load_table
 
 
 def create_views(spark: SparkSession, sf_dir: str) -> list[str]:
-    """Register every fixture table under ``sf_dir`` as a temp view.
+    """Register every fixture table under ``sf_dir`` as a temp view over
+    the relation :func:`~.sources.io.load_table` returns, so views and
+    DataFrame queries share one read per table.
 
     Returns the list of view names.  Idempotent (replaces existing
     views), session-scoped (no warehouse writes), and lazy (no jobs --
-    just parquet footer reads for schema).
+    the schemas are declared, not inferred).
     """
-    names = []
     for t in FIXTURE_TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        spark.read.parquet(path).createOrReplaceTempView(t)
-        names.append(t)
-    return names
+        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+    return list(FIXTURE_TABLES)
 
 
 def run_sql(spark: SparkSession, sf_dir: str, sql: str):

@@ -48,6 +48,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import Column, DataFrame, functions as F  # noqa: E402
 
 from etl_onprem_to_cloud_spark.session import get_spark  # noqa: E402
+from etl_onprem_to_cloud_spark.sources.io import load_table  # noqa: E402
 
 REPLICAS = 10
 DIMS = ["region", "nation", "supplier", "part"]
@@ -114,11 +115,9 @@ def replicas(df: DataFrame, table: str, preset: str) -> DataFrame:
 def replicate(spark, src: str, dst: str, preset: str) -> None:
     """Write the ``preset`` derivation of fixture dir ``src`` to ``dst``."""
     for t in DIMS:
-        spark.read.parquet(f"{src}/{t}.parquet").write.mode("overwrite").parquet(
-            f"{dst}/{t}.parquet"
-        )
+        load_table(spark, src, t).write.mode("overwrite").parquet(f"{dst}/{t}.parquet")
     for t in KEY_SHIFTS:
-        replicas(spark.read.parquet(f"{src}/{t}.parquet"), t, preset).repartition(
+        replicas(load_table(spark, src, t), t, preset).repartition(
             PRESETS[preset].partitions
         ).write.mode("overwrite").parquet(f"{dst}/{t}.parquet")
         print(f"# built {t}", file=sys.stderr)

@@ -1,6 +1,7 @@
 """scripts/derive.py presets on the smallest fixture: every fact table
 grows 10x with unique shifted keys, embedding norms survive the
-perturbation, replica token sets are disjoint, and dims are copied.
+perturbation, replica token sets are disjoint, dims are copied, and
+every output table keeps the declared fixture schema.
 Results are checked in Python over collected rows: at this size that
 is cheaper than one Spark job per check."""
 
@@ -19,6 +20,8 @@ sys.path.insert(
 )
 
 import derive  # noqa: E402
+
+from etl_onprem_to_cloud_spark.schemas import FIXTURE_TABLES  # noqa: E402
 
 
 def _rows(path):
@@ -42,6 +45,8 @@ def test_replicate_copies_dims_and_scales_facts(spark, sf_dir, tmp_path, monkeyp
     for t in derive.KEY_SHIFTS:
         n = pq.read_metadata(f"{sf_dir}/{t}.parquet").num_rows
         assert pq.read_table(f"{dst}/{t}.parquet").num_rows == 10 * n, t
+    for t in derive.DIMS + list(derive.KEY_SHIFTS):
+        assert spark.read.parquet(f"{dst}/{t}.parquet").schema == FIXTURE_TABLES[t], t
 
 
 @pytest.fixture(scope="module")

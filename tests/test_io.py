@@ -4,6 +4,9 @@ partitioned writes with partition pruning, and catalog tables
 
 from __future__ import annotations
 
+import os
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -11,9 +14,12 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    TimestampNTZType,
 )
 
 from etl_onprem_to_cloud_spark.plans import explain_str
+from etl_onprem_to_cloud_spark.schemas import FIXTURE_TABLES
+from etl_onprem_to_cloud_spark.sources import io
 from etl_onprem_to_cloud_spark.sources.io import (
     load_table,
     read_csv,
@@ -24,6 +30,7 @@ from etl_onprem_to_cloud_spark.sources.io import (
     write_csv,
     write_parquet,
 )
+from etl_onprem_to_cloud_spark.sqlfront import create_views
 
 SCHEMA = StructType(
     [
@@ -231,3 +238,42 @@ def test_pin_release_unpersists(spark, sf_dir):
     assert release_pinned() >= 1
     assert not df.storageLevel.useMemory
     assert release_pinned() == 0  # registry drained
+
+
+def test_declared_fixture_schemas_match_the_files(spark, sf_dir):
+    """FIXTURE_TABLES is the schema load_table reads with, so it must be
+    what Spark would infer (names, order, types, nullability) -- and
+    every shipped fixture dir must share the test fixture's footers.
+    The footer comparison runs no Spark job."""
+    for t, schema in FIXTURE_TABLES.items():
+        assert spark.read.parquet(f"{sf_dir}/{t}.parquet").schema == schema, t
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    others = [os.path.join(os.path.dirname(sf_dir), d) for d in ("sf0.01", "sf0.1")]
+    others += [os.path.join(root, "perfbench", "data", d) for d in ("sf0.001", "sf0.01")]
+    others = [d for d in others if os.path.isdir(d)]
+    assert others
+    for t in FIXTURE_TABLES:
+        want = pq.read_schema(f"{sf_dir}/{t}.parquet")
+        for d in others:
+            got = pq.read_schema(f"{d}/{t}.parquet")
+            assert got.equals(want, check_metadata=False), (d, t)
+
+
+def test_fixture_reads_run_no_jobs(spark, sf_dir, monkeypatch):
+    """Registering every view and loading every table from a cold table
+    cache runs no Spark job: the schemas are declared, not inferred."""
+    monkeypatch.setattr(io, "_TABLE_CACHE", {})
+    sc = spark.sparkContext
+    group = "test_fixture_reads_run_no_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        create_views(spark, sf_dir)
+        for t in FIXTURE_TABLES:
+            load_table(spark, sf_dir, t)
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert isinstance(spark.table("events").schema["ts"].dataType, TimestampNTZType)
+    with pytest.raises(KeyError):
+        load_table(spark, sf_dir, "nope")
