@@ -583,7 +583,6 @@ def connected_components(
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iterations: int = 20,
-    on_nonconvergence: str = "raise",
 ) -> DataFrame:
     """Connected components over a pair list -> (node, component), where
     component = min node id reachable through any chain of pairs.  This
@@ -595,22 +594,17 @@ def connected_components(
     node's current label against the (undirected) edge list and keeps
     the minimum neighbor label; stop when a round changes nothing.
     Rounds needed = graph diameter (near-dup clusters are shallow -- a
-    handful of rounds).  Each round is one shuffle join + one groupBy;
-    ``localCheckpoint`` truncates the growing lineage so round N does
-    not replay rounds 1..N-1.  Convergence detection is folded into the
-    update itself: the update select carries a per-row changed flag and
-    the round's single action both materializes the (lazy) checkpoint
-    and sums the flag -- one job per round, no extra comparison join.
+    handful of rounds).  Each round is one shuffle join + one groupBy,
+    driven by :func:`operators.fixpoint.iterate`: labels only fall, so
+    ``sum(component)`` is unchanged exactly when no label changed, and
+    that sum rides on the round's one materializing job.
 
-    If the loop exits without converging (graph diameter >
-    ``max_iterations``), labels would silently split one long chain into
-    several components and transitive dedup would keep extra survivors;
-    ``on_nonconvergence`` makes that explicit: ``"raise"`` (default)
-    raises RuntimeError, ``"warn"`` logs a warning and returns the
-    partial labels.
+    Raises RuntimeError when the loop exits without converging (graph
+    diameter > ``max_iterations``): the labels would silently split one
+    long chain into several components and transitive dedup would keep
+    extra survivors.
     """
-    if on_nonconvergence not in ("raise", "warn"):
-        raise ValueError(f"on_nonconvergence must be 'raise' or 'warn', got {on_nonconvergence!r}")
+    from ..operators.fixpoint import iterate
     from ..operators.layout import ckpt_partitioned
 
     edges = (
@@ -621,13 +615,8 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # r11: store the static edge list hash-partitioned by the per-round
-    # join key so every round's label join streams it WITHOUT an
-    # exchange (ckpt_partitioned docstring; a plain checkpoint under
-    # AQE forgets its layout).  The pair build above keeps its own
-    # AQE-on checkpoint -- the partitioned copy is one cheap extra
-    # materialization of the (near-dup-bounded) pair list, paid once
-    # against an edge-wide exchange per round.
+    # Static edge list stored hash-partitioned by the per-round join key
+    # (ckpt_partitioned; PROBES_r11.json, OPTIMIZATION_r11.md).
     edges = ckpt_partitioned(edges, "dst")
     labels = (
         edges.select(F.col("src").alias("node"))
@@ -635,49 +624,37 @@ def connected_components(
         .withColumn("component", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    converged = False
-    for _ in range(max_iterations):
-        # shuffle_hash on the node-sized label side (r10): sort-merge
-        # re-sorted the edge stream every round; labels derive from a
-        # corpus-scaled subtree so they may never broadcast, but their
-        # per-partition hash build is bounded by the node set.
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
+        # shuffle_hash on the node-sized label side (OPTIMIZATION_r10.md §6):
+        # labels derive from a corpus-scaled subtree, so they may never
+        # broadcast, and sort-merge re-sorted the edge stream per round.
         neighbor_min = (
             edges.join(labels.hint("shuffle_hash"), edges.dst == labels.node)
             .groupBy("src")
             .agg(F.min("component").alias("nbr_component"))
         )
-        new_component = F.least(
-            F.col("component"), F.coalesce("nbr_component", F.col("component"))
+        return labels.join(
+            neighbor_min, labels.node == neighbor_min.src, "left"
+        ).select(
+            "node",
+            F.least(
+                F.col("component"), F.coalesce("nbr_component", F.col("component"))
+            ).alias("component"),
         )
-        updated = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                new_component.alias("component"),
-                (new_component < F.col("component"))
-                .cast("int")
-                .alias("__changed"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        # The one action of the round: materializes the lazy checkpoint
-        # AND evaluates the changed flag in the same job.
-        changed = updated.agg(F.sum("__changed")).first()[0] or 0
-        labels = updated.drop("__changed")
-        if changed == 0:
-            converged = True
-            break
+
+    labels, converged = iterate(
+        labels,
+        step,
+        max_iterations,
+        fingerprint=F.sum(F.col("component").cast("decimal(38,0)")),
+    )
     if not converged:
-        msg = (
+        raise RuntimeError(
             f"connected_components did not converge in {max_iterations} "
             "iterations (graph diameter exceeds max_iterations); labels "
             "would split long duplicate chains into multiple components"
         )
-        if on_nonconvergence == "raise":
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
     return labels
 
 
@@ -810,7 +787,6 @@ def connected_components_star(
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iterations: int = 25,
-    on_nonconvergence: str = "raise",
 ) -> DataFrame:
     """Connected components via alternating LARGE-STAR / SMALL-STAR
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -830,37 +806,23 @@ def connected_components_star(
       min of the smaller neighborhood.
     Each phase is one groupBy(min) + one re-join + distinct -- the same
     shuffle budget per round as min-label, but geometrically fewer
-    rounds on deep graphs.  localCheckpoint bounds lineage exactly as
-    in connected_components; convergence = the (count, xor-of-hashes)
-    signature of the edge set repeating, one action per round.
+    rounds on deep graphs.  :func:`operators.fixpoint.iterate` cuts
+    every round; convergence = the edge set's (count, sum of row
+    hashes) fingerprint repeating; the sum of the 64-bit hashes is
+    DECIMAL(38,0), exact at any edge count (a BIGINT sum would overflow,
+    which raises under ANSI).
 
     At convergence the edge set IS the star forest (child -> root), so
     labels fall out without further joins.
     """
-    if on_nonconvergence not in ("raise", "warn"):
-        raise ValueError(
-            f"on_nonconvergence must be 'raise' or 'warn', got {on_nonconvergence!r}"
-        )
+    from ..operators.fixpoint import iterate
+
     edges = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
         .localCheckpoint(eager=True)
     )
-
-    def _signature(e: DataFrame) -> tuple[int, int]:
-        # Order-insensitive edge-set fingerprint: (count, sum of row
-        # hashes).  Hashes are reduced mod 2^40 so the sum stays exact
-        # in int64 up to ~8M edges; beyond that it wraps, which is still
-        # deterministic -- a false "converged" additionally requires the
-        # count to match, making collision odds negligible.
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("src", "dst") % F.lit(1 << 40)), F.lit(0)
-            ).alias("h"),
-        ).first()
-        return int(row["n"]), int(row["h"])
 
     def _large_star(e: DataFrame) -> DataFrame:
         both = e.unionByName(
@@ -869,9 +831,10 @@ def connected_components_star(
         mins = both.groupBy("src").agg(
             F.least(F.min("dst"), F.first("src")).alias("m")
         )
-        # shuffle_hash (r10): mins is one row per node and leaves its
-        # groupBy already hash-partitioned on src, so the build side
-        # re-reads in place and the edge stream skips its per-phase sort.
+        # shuffle_hash (OPTIMIZATION_r10.md §6): mins is one row per node
+        # and leaves its groupBy already hash-partitioned on src, so the
+        # build side re-reads in place and the edge stream skips its
+        # per-phase sort.
         return (
             both.join(mins.hint("shuffle_hash"), "src")
             .filter(F.col("dst") > F.col("src"))
@@ -893,29 +856,20 @@ def connected_components_star(
         self_link = mins.select("src", F.col("m").alias("dst"))
         return relink.unionByName(self_link).distinct()
 
-    sig = _signature(edges)
-    converged = False
-    for _ in range(max_iterations):
-        # Lazy checkpoint: the signature aggregation is the round's ONE
-        # action and materializes the checkpoint in the same job (the
-        # connected_components trick -- no separate eager-materialize
-        # pass per round).
-        edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
-        new_sig = _signature(edges)
-        if new_sig == sig:
-            converged = True
-            break
-        sig = new_sig
+    edges, converged = iterate(
+        edges,
+        lambda e, _: _small_star(_large_star(e)),
+        max_iterations,
+        fingerprint=F.struct(
+            F.count(F.lit(1)),
+            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")),
+        ),
+    )
     if not converged:
-        msg = (
+        raise RuntimeError(
             f"connected_components_star did not converge in {max_iterations} "
             "iterations; labels may not yet point at the component minimum"
         )
-        if on_nonconvergence == "raise":
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
     roots = edges.select(F.col("dst").alias("node")).distinct().withColumn(
         "component", F.col("node")
     )

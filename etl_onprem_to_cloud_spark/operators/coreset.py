@@ -46,7 +46,6 @@ def k_center_greedy(
     k: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    checkpoint_every: int = 4,
     sample_rate: float | None = None,
     sample_salt: str = "kcenter",
 ) -> DataFrame:
@@ -108,7 +107,7 @@ def k_center_greedy(
             "v",
             F.least(F.col("d"), _dist2_to_literal(F.col("v"), center)).alias("d"),
         )
-        if step % checkpoint_every == 0 and step + 1 < k:
+        if step % 4 == 0 and step + 1 < k:
             d = d.localCheckpoint(eager=True)
     return spark.createDataFrame(picked, "step int, id bigint, dist double")
 

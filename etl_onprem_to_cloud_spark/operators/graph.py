@@ -19,16 +19,16 @@ Scale shape per iteration: one join of ranks to edges on src (both
 sides hash-partitioned on the same key, so consecutive iterations reuse
 the exchange), one groupBy dst with map-side partial sums, one left
 join back to the node set for dangling-in-degree nodes.  Lineage is cut
-with ``localCheckpoint`` every few rounds exactly like the
-connected-components engines in ``llm/dedup.py`` (same pattern the
-GraphFrames/Pregel implementations use).  Iteration count is fixed --
-at 100 TB you run a budgeted number of supersteps, not to convergence.
+every 4 supersteps by ``operators/fixpoint.iterate`` (the
+GraphFrames/Pregel pattern).  Iteration count is fixed -- at 100 TB you
+run a budgeted number of supersteps, not to convergence.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .fixpoint import iterate
 from .layout import spread_input
 
 SCALE = 10**9
@@ -38,7 +38,6 @@ def pagerank_fixed_point(
     edges: DataFrame,
     iterations: int = 8,
     damping_pct: int = 85,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Ranks for the directed graph in ``edges`` (columns src, dst).
 
@@ -66,7 +65,8 @@ def pagerank_fixed_point(
 
     ranks = nodes.withColumn("rank", F.lit(r0).cast("bigint"))
     contrib_edges = e.join(deg, "src").localCheckpoint(eager=True)
-    for i in range(iterations):
+
+    def step(ranks: DataFrame, _: int) -> DataFrame:
         inbound = (
             ranks.join(contrib_edges, ranks.node == contrib_edges.src)
             .select(
@@ -76,15 +76,15 @@ def pagerank_fixed_point(
             .groupBy("node")
             .agg(F.sum("c").alias("s"))
         )
-        ranks = nodes.join(inbound, "node", "left").select(
+        return nodes.join(inbound, "node", "left").select(
             "node",
             (
                 F.lit(base)
                 + F.expr(f"({damping_pct} * coalesce(s, 0L)) div 100")
             ).cast("bigint").alias("rank"),
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            ranks = ranks.localCheckpoint(eager=True)
+
+    ranks, _ = iterate(ranks, step, iterations, every=4)
     return ranks
 
 

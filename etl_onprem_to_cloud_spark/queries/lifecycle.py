@@ -8,8 +8,9 @@ a warehouse-grade engine needs on top of it.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 
+from ..operators.fixpoint import iterate
 from ..operators.lifecycle import cdc_apply, scd2_build, table_diff
 from ._util import cat, fmt_ts
 from . import query
@@ -297,24 +298,25 @@ def q_hierarchy_revenue_rollup(spark, sf_dir):
     """Closure rounds are join-free ARITHMETIC on the ancestor column
     (parent = div 10), so each round is a map + union + distinct --
     one shuffle per round on the (node, ancestor) pair, size bounded
-    by parts x depth.  The revenue join and final rollup shuffle on
-    the part/ancestor keys.  For an arbitrary edge table the same loop
-    shape swaps the arithmetic for an equi-join per round (the k-core
-    / CC pattern)."""
+    by parts x depth, cut every other round by
+    :func:`operators.fixpoint.iterate`.  The revenue join and final
+    rollup shuffle on the part/ancestor keys.  For an arbitrary edge
+    table the same loop shape swaps the arithmetic for an equi-join per
+    round (the k-core / CC pattern)."""
     li = cat(spark, sf_dir).lineitem
     from ..functions.numeric import dec
 
     parts = li.select(F.col("l_partkey").alias("p")).distinct()
     anc = parts.select(F.col("p").alias("node"), F.col("p").alias("ancestor"))
-    closure = anc
-    for i in range(_HIER_ROUNDS):
+
+    def step(closure: DataFrame, _: int) -> DataFrame:
         nxt = (
             closure.filter(F.col("ancestor") >= 10)
             .select("node", F.expr("ancestor div 10").alias("ancestor"))
         )
-        closure = closure.unionByName(nxt).distinct()
-        if i % 2 == 1 and i + 1 < _HIER_ROUNDS:
-            closure = closure.localCheckpoint(eager=True)
+        return closure.unionByName(nxt).distinct()
+
+    closure, _ = iterate(anc, step, _HIER_ROUNDS, every=2)
     rev = li.groupBy(F.col("l_partkey").alias("p")).agg(
         F.sum(dec("l_extendedprice")).alias("r")
     )

@@ -18,12 +18,13 @@ DuckDB texts, total output order.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.numeric import dec, portable_round
 from ..operators import ranks as RK
+from ..operators.fixpoint import iterate
 from ..operators.layout import ckpt_partitioned, spread_input
 from ..operators.sampling import duck_hash_gate, hash_gate
 from ..pinned import pin
@@ -990,21 +991,17 @@ def q_kcore_copurchase(spark, sf_dir):
     """Edge build: lineitem self-join on the order key (one shuffle,
     spread across the parallelism when the scan is under-partitioned).
     Each peeling round is one shuffle on the node key (degree count)
-    plus two SHUFFLE-HASH semi-join filters of the edge list (the hint
-    was dropped mid-r11 for AQE's runtime choice, then RESTORED on the
-    three-scale A/B: -0.6-0.8 s at sf0.1, wash at sf10, +17% at sf100
-    without it -- see the inline comment).  Lineage is cut EVERY
-    round: edges is consumed
-    twice next round (degree rollup + semi-join chain), and without the
-    cut each consumer re-executes the previous round's plan (the BFS
-    every-round lesson, measured there at 4.8 s vs 5.4 s).  Round 0 is
-    cut on DISK (the unthresholded pair list is corpus-scaled under
-    densification -- the BFS DISK_ONLY rationale); later rounds hold
-    the k-shrunk list and keep the memory default; each round's
-    materializing action doubles as a convergence check (count
-    unchanged = fixpoint -> remaining rounds are the identity).  At
-    100 TB the peeling loop runs the same per-round plan until that
-    fixpoint."""
+    plus two SHUFFLE-HASH semi-join filters of the edge list (see the
+    inline comment).  :func:`operators.fixpoint.iterate` cuts lineage
+    every round -- edges is consumed twice next round (degree rollup +
+    semi-join chain) -- and the edge count is the fingerprint: peeling
+    only removes edges, so an unchanged count is an unchanged edge set
+    and the remaining rounds are the identity (value-identical to the
+    oracle's full unrolling).  Round 0 is cut on DISK (the
+    unthresholded pair list is corpus-scaled under densification, the
+    BFS DISK_ONLY rationale); later rounds hold the k-shrunk list and
+    keep the memory default.  At 100 TB the peeling loop runs the same
+    per-round plan until that fixpoint."""
     li = spread_input(
         cat(spark, sf_dir).lineitem.select("l_orderkey", "l_partkey"),
         "l_orderkey",
@@ -1018,8 +1015,8 @@ def q_kcore_copurchase(spark, sf_dir):
         .distinct()
         .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
     )
-    prev_n = None
-    for i in range(1, _KCORE_ROUNDS + 1):
+
+    def step(edges: DataFrame, _: int) -> DataFrame:
         deg = (
             edges.select(F.col("x").alias("node"))
             .unionAll(edges.select(F.col("y").alias("node")))
@@ -1027,20 +1024,14 @@ def q_kcore_copurchase(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("deg"))
         )
         keep = deg.filter(F.col("deg") >= _KCORE_K).select("node")
-        # shuffle_hash RESTORED (r11, three-scale A/B recorded in
-        # PROBES_r11.json and OPTIMIZATION_r11.md; ``scripts/ab.py
-        # --leg base --leg nohint`` re-runs it with every hint off):
-        # dropping the hint for AQE's runtime choice read 0.6-0.8 s
-        # faster at sf0.1 and a wash at sf10 (13.5 vs 14.0
-        # interleaved), but at sf100 -- fresh JVM
-        # per leg, the standing one-JVM-per-query methodology -- the
-        # no-hint leg cost +17% (161.0 vs 137.3 s; the densified edge
-        # stream pays per-round sort/strategy overhead once its
-        # partitions outgrow AQE's conversion windows).  The hint keeps
-        # the SHJ per-partition build bounded by the node set (keep
-        # derives from a corpus-scaled rollup, so it may never be
-        # FORCED to broadcast).
-        edges = (
+        # shuffle_hash kept on the three-scale A/B (PROBES_r11.json,
+        # OPTIMIZATION_r11.md; ``scripts/ab.py --leg base --leg nohint``
+        # re-runs it): AQE's own choice read 0.6-0.8 s faster at sf0.1
+        # and a wash at sf10, but cost +17% at sf100 (161.0 vs 137.3 s).
+        # keep derives from a corpus-scaled rollup, so it may never be
+        # FORCED to broadcast; the hint bounds the SHJ build by the node
+        # set.
+        return (
             edges.join(
                 keep.withColumnRenamed("node", "x").hint("shuffle_hash"),
                 "x",
@@ -1053,20 +1044,10 @@ def q_kcore_copurchase(spark, sf_dir):
             )
             .select("x", "y")
         )
-        if i < _KCORE_ROUNDS:
-            # r11: fold a convergence check into the round's one
-            # materializing action (the connected_components trick --
-            # lazy checkpoint + count in the same job, so this costs
-            # no extra job vs the eager checkpoint it replaces).
-            # Peeling only ever REMOVES edges, so an unchanged count
-            # means an unchanged edge set and every remaining round is
-            # the identity -- exiting early is value-identical to the
-            # oracle's full unrolling.
-            edges = edges.localCheckpoint(eager=False)
-            n = edges.count()
-            if n == prev_n:
-                break
-            prev_n = n
+
+    edges, _ = iterate(
+        edges, step, _KCORE_ROUNDS, fingerprint=F.count(F.lit(1))
+    )
     return (
         edges.select(F.col("x").alias("node"))
         .unionAll(edges.select(F.col("y").alias("node")))
@@ -3354,29 +3335,27 @@ def q_lpa_communities(spark, sf_dir):
     """Each round is ONE shuffle on the node key: the (node, label)
     vote count and the argmax window share the same partitioning, and
     the neighbour join keys on the node side of the undirected edge
-    list.  Lineage is cut every other round (the k-core convention) so
-    the unrolled loop cannot stack exponential plan growth.  At 100 TB
-    LPA is THE community algorithm that survives -- no global modular
-    optimization, just per-node majority votes."""
+    list.  :func:`operators.fixpoint.iterate` cuts lineage every other
+    round so the unrolled loop cannot stack exponential plan growth.
+    At 100 TB LPA is THE community algorithm that survives -- no global
+    modular optimization, just per-node majority votes."""
     edges = copurchase_edges(cat(spark, sf_dir).lineitem).select("x", "y")
     und = edges.select(
         F.col("x").alias("node"), F.col("y").alias("nb")
     ).unionAll(edges.select(F.col("y").alias("node"), F.col("x").alias("nb")))
-    # r11: the static und list is joined on nb EVERY round; storing it
-    # hash-partitioned by nb (layout.ckpt_partitioned -- a plain
-    # checkpoint under AQE forgets its layout) lets each round's votes
-    # join stream it with no exchange, so only the node-sized label
-    # side shuffles per round.  Same single materialization as the
-    # plain eager checkpoint it replaces.
+    # Static und list stored hash-partitioned by nb (ckpt_partitioned;
+    # PROBES_r11.json, OPTIMIZATION_r11.md): each round's votes join
+    # streams it with no exchange, only the label side shuffles.
     und = ckpt_partitioned(und, "nb")
     labels = und.select("node").distinct().select(
         "node", F.col("node").alias("lbl")
     )
-    for i in range(1, _LPA_ROUNDS + 1):
-        # shuffle_hash on the node-sized label side (r10): sort-merge
-        # re-sorted the edge-sized und stream every round; the label
-        # side can never broadcast (corpus-scaled subtree) but builds a
-        # bounded per-partition hash map.
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
+        # shuffle_hash on the node-sized label side (OPTIMIZATION_r10.md
+        # §6): sort-merge re-sorted the edge-sized und stream every
+        # round; the label side can never broadcast (corpus-scaled
+        # subtree) but builds a bounded per-partition hash map.
         votes = (
             und.join(
                 labels.select(
@@ -3388,12 +3367,10 @@ def q_lpa_communities(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("c"))
         )
         # argmax by (c DESC, nlbl ASC) as min(struct(-c, nlbl)): struct
-        # ordering is lexicographic, so this is value-identical to the
-        # row_number window it replaces (r10 optimization, guide §2.4) --
-        # but it aggregates map-side to <= one row per node per partition
-        # and never sorts, where the window re-shuffled the (node, nlbl)
-        # vote stream a second time and sorted every partition.
-        labels = (
+        # ordering is lexicographic, so this is value-identical to a
+        # row_number window, but it aggregates map-side to <= one row
+        # per node per partition and never sorts.
+        return (
             votes.groupBy("node")
             .agg(
                 F.min(
@@ -3405,8 +3382,8 @@ def q_lpa_communities(spark, sf_dir):
             )
             .select("node", F.col("__m.nlbl").alias("lbl"))
         )
-        if i % 2 == 0 and i < _LPA_ROUNDS:
-            labels = labels.localCheckpoint(eager=True)
+
+    labels, _ = iterate(labels, step, _LPA_ROUNDS, every=2)
     return (
         labels.groupBy(F.col("lbl").alias("community"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
@@ -3616,8 +3593,10 @@ def q_bfs_hops_from_hubs(spark, sf_dir):
     partitioning round to round.  Relaxation carries ALL labelled
     nodes forward (hop set only ever grows), so rounds are idempotent
     past the diameter -- the fixed unrolling stays deterministic.
-    Lineage is cut every round (measured faster than the k-core
-    every-other cadence; see the inline comment)."""
+    :func:`operators.fixpoint.iterate` cuts every round: hops is read
+    twice next round (frontier + carry) and, uncut, re-runs its rollup
+    (4.8 s vs 5.4 s every other round at sf0.1, OPTIMIZATION_r10.md).
+    No fingerprint: its cut costs a job more than an eager one."""
     li = spread_input(
         cat(spark, sf_dir).lineitem.select("l_orderkey", "l_partkey"),
         "l_orderkey",
@@ -3637,10 +3616,9 @@ def q_bfs_hops_from_hubs(spark, sf_dir):
     #     unthresholded co-purchase edge list is corpus-scaled under
     #     densification (fixed part catalog, fact-scaled orders), and
     #     the first r10 leg OOM'd a 48 g heap materializing it into
-    #     heap-priced block storage.  k-core survives the same decade
-    #     because its first cut lands AFTER two degree peels have
-    #     shrunk the list; BFS needs the full graph every round, so
-    #     its blocks belong on disk.
+    #     heap-priced block storage.  BFS needs the full graph every
+    #     round, so its blocks belong on disk (k-core cuts its
+    #     unpeeled pair list on DISK for the same reason).
     # (2) checkpointing und = union(proj(edges), proj(edges)) ran the
     #     corpus-wide dedup TWICE: ReusedExchange dedupes the shuffle,
     #     but each union branch re-executes its own post-shuffle
@@ -3655,17 +3633,11 @@ def q_bfs_hops_from_hubs(spark, sf_dir):
     und = edges.select(
         F.col("x").alias("node"), F.col("y").alias("nb")
     ).unionAll(edges.select(F.col("y").alias("node"), F.col("x").alias("nb")))
-    # r11: store und itself, hash-partitioned by node
-    # (layout.ckpt_partitioned): every round's frontier join AND the
-    # degree rollup key on node, so the stored layout removes the
-    # und-wide exchange from each of them and each round reads und's
-    # own blocks once instead of re-reading the edge checkpoint twice
-    # through the union.  Safe w.r.t. the sf100 catches above: und
-    # derives from the ALREADY-CHECKPOINTED dedup output (map-only
-    # union branches -- the double-HashAggregate re-execution cannot
-    # come back), and the copy stays on DISK like the edge list it
-    # doubles (2|E| rows of 2 bigints; the co-purchase pair set is
-    # catalog-bounded, so the extra disk is bounded too).
+    # und stored hash-partitioned by node (ckpt_partitioned;
+    # PROBES_r11.json, OPTIMIZATION_r11.md): the frontier join and the
+    # degree rollup key on node.  It derives from the checkpointed dedup
+    # output (map-only union branches, so catch (2) cannot come back)
+    # and stays on DISK like the edge list it doubles.
     und = ckpt_partitioned(und, "node", storage_level=StorageLevel.DISK_ONLY)
     deg = und.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
     seeds = (
@@ -3674,29 +3646,25 @@ def q_bfs_hops_from_hubs(spark, sf_dir):
         .select("node")
     )
     hops = seeds.select("node", F.lit(0).alias("hop"))
-    for i in range(1, _BFS_ROUNDS + 1):
+
+    def step(hops: DataFrame, i: int) -> DataFrame:
         # Frontier-only expansion: only nodes labelled LAST round can
         # improve a neighbour (an interior node's neighbours already
-        # hold hop <= interior+1), so expanding just the (i-1)-ring
-        # reaches the identical min-hop fixpoint as the oracle's full
-        # relaxation at a fraction of the join volume -- the round-1
+        # hold hop <= interior+1), so expanding just the i-ring reaches
+        # the identical min-hop fixpoint as the oracle's full
+        # relaxation at a fraction of the join volume -- the first
         # join is 5 seed rows, not the whole labelled set.
-        frontier = hops.filter(F.col("hop") == i - 1).select("node")
-        # shuffle_hash on the node-sized frontier (r10): sort-merge
-        # re-sorted the full und stream every round.
+        frontier = hops.filter(F.col("hop") == i).select("node")
+        # shuffle_hash on the node-sized frontier (OPTIMIZATION_r10.md
+        # §6): sort-merge re-sorted the full und stream every round.
         expanded = hops.unionAll(
             frontier.hint("shuffle_hash").join(und, "node").select(
-                F.col("nb").alias("node"), F.lit(i).alias("hop")
+                F.col("nb").alias("node"), F.lit(i + 1).alias("hop")
             )
         )
-        hops = expanded.groupBy("node").agg(F.min("hop").alias("hop"))
-        # Cut lineage EVERY round: hops is consumed twice next round
-        # (frontier filter + union carry); measured at sf0.1 the
-        # every-round cut beats the every-other-round k-core cadence
-        # (4.8 s vs 5.4 s) because the doubled subtree re-executes its
-        # rollup rather than collapsing to a ReusedExchange.
-        if i < _BFS_ROUNDS:
-            hops = hops.localCheckpoint(eager=True)
+        return expanded.groupBy("node").agg(F.min("hop").alias("hop"))
+
+    hops, _ = iterate(hops, step, _BFS_ROUNDS)
     rings = hops.groupBy("hop").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_nodes")
     )
@@ -4041,21 +4009,22 @@ def q_bellman_ford_cheapest(spark, sf_dir):
     """Each round is one node-keyed min rollup, and only the nodes
     IMPROVED last round expand (a node's proposals depend only on its
     dist, so re-expanding unchanged nodes re-proposes already-applied
-    candidates -- the BFS frontier argument, weighted).  Lineage is
-    cut every round; edge list checkpointed once (five-consumer
-    exchange-reuse lesson).  At 100 TB this is THE shortest-path
-    shape that survives: no priority queue, just k scans of a
-    node-partitioned relation."""
+    candidates -- the BFS frontier argument, weighted); the state
+    carries that ``improved`` flag out of the round's one min
+    aggregate.  :func:`operators.fixpoint.iterate` cuts every round and
+    stops at the first repeated (count, sum of dist): nodes are only
+    added and dists only fall, so a repeat is an unchanged state.  Edge
+    list checkpointed once (five-consumer exchange-reuse lesson).  At
+    100 TB this is THE shortest-path shape that survives: no priority
+    queue, just k scans of a node-partitioned relation."""
     edges = copurchase_edges(cat(spark, sf_dir).lineitem, weight=True)
     und = edges.select(
         F.col("x").alias("node"), F.col("y").alias("nb"), "w"
     ).unionAll(edges.select(F.col("y").alias("node"), F.col("x").alias("nb"), "w"))
-    # r11: store und hash-partitioned by node (layout.ckpt_partitioned):
-    # the relaxation join and the seed-degree rollup both key on node,
-    # so the stored layout removes the und-wide exchange from every
-    # round and und's two union reads of the edge checkpoint happen
-    # once instead of per round.  und is support-thresholded (memory
-    # default is fine -- the unthresholded BFS twin is the DISK case).
+    # und stored hash-partitioned by node (ckpt_partitioned;
+    # PROBES_r11.json, OPTIMIZATION_r11.md): the relaxation join and the
+    # seed-degree rollup both key on node.  und is support-thresholded,
+    # so the memory default holds it (the BFS twin is the DISK case).
     und = ckpt_partitioned(und, "node")
     deg = und.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
     src = (
@@ -4063,29 +4032,33 @@ def q_bellman_ford_cheapest(spark, sf_dir):
         .limit(1)
         .select("node")
     )
-    dist = src.select("node", F.lit(0).cast("bigint").alias("dist"))
-    frontier = dist
-    for i in range(1, _BF_ROUNDS + 1):
-        # shuffle_hash on the node-sized frontier (r10, the BFS/LPA
-        # rationale): no per-round sort of the und stream.
-        cand = frontier.hint("shuffle_hash").join(und, "node").select(
-            F.col("nb").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
-        )
-        new = (
-            dist.unionAll(cand)
+    dist = src.selectExpr("node", "CAST(0 AS BIGINT) AS dist", "true AS improved")
+
+    def step(dist: DataFrame, _: int) -> DataFrame:
+        # shuffle_hash on the node-sized frontier (OPTIMIZATION_r10.md
+        # §6): no per-round sort of the und stream.
+        cand = dist.filter("improved").hint("shuffle_hash").join(und, "node")
+        # min over (dist, is_candidate): a candidate wins only when it is
+        # strictly cheaper than the node's old dist, or the node is new.
+        old = F.struct(F.col("dist").alias("d"), F.lit(False).alias("c"))
+        new = F.struct((F.col("dist") + F.col("w")).alias("d"), F.lit(True).alias("c"))
+        return (
+            dist.select("node", old.alias("m"))
+            .unionAll(cand.select(F.col("nb").alias("node"), new.alias("m")))
             .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
+            .agg(F.min("m").alias("m"))
+            .select("node", F.col("m.d").alias("dist"), F.col("m.c").alias("improved"))
         )
-        frontier = (
-            new.join(
-                dist.select("node", F.col("dist").alias("od")), "node", "left"
-            )
-            .filter(F.col("od").isNull() | (F.col("dist") < F.col("od")))
-            .select("node", "dist")
-        )
-        dist = new
-    return dist.orderBy("dist", "node").limit(20)
+
+    dist, _ = iterate(
+        dist,
+        step,
+        _BF_ROUNDS,
+        fingerprint=F.struct(
+            F.count(F.lit(1)), F.sum(F.col("dist").cast("decimal(38,0)"))
+        ),
+    )
+    return dist.select("node", "dist").orderBy("dist", "node").limit(20)
 
 
 # --------------------------------------------------------------------------

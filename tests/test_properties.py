@@ -174,8 +174,6 @@ def test_connected_components_raises_without_convergence(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(pairs, max_iterations=1)
-    with pytest.warns(RuntimeWarning, match="did not converge"):
-        connected_components(pairs, max_iterations=1, on_nonconvergence="warn")
 
 
 def test_connected_components_fewer_jobs_than_two_action_loop(spark):
