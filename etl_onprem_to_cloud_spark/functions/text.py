@@ -158,18 +158,6 @@ def word_ngrams_from_tokens(toks: Column, n: int = 2) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def dup_ngram_fraction(grams: Column) -> Column:
-    """Fraction of n-gram occurrences that are repeats of an earlier
-    occurrence: 1 - distinct/total over a MATERIALIZED n-gram column
-    (word_ngrams_from_tokens).  0.0 for gram-less docs.  The cheap
-    per-row repetition signal -- high values flag boilerplate/spam."""
-    total = F.size(grams)
-    return F.when(
-        total > 0,
-        F.lit(1.0) - F.size(F.array_distinct(grams)) / total.cast("double"),
-    ).otherwise(F.lit(0.0))
-
-
 def char_ngrams(text: Column, n: int = 5) -> Column:
     """Character n-grams of the normalized text (array<string>, distinct)."""
     normalized = F.concat_ws(" ", tokens(F.lower(text)))

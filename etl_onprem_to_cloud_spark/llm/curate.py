@@ -10,11 +10,10 @@ the per-(split, source) manifest -- the way
 One code path means the oracle-checked query and the operational sinks
 cannot drift.
 
-Scale notes: one scan feeds every stage; the repetition predicate runs
-as an exploded aggregation (generate-once + partial agg + keep-join)
-because a pushdown-inlined in-row filter re-evaluates the gram
-construction per array element (measured 17s vs ~1s at sf0.1 -- see
-q_training_data_pipeline's docstring); the split write is
+Scale notes: one scan feeds every stage and the DAG has one exchange,
+the exact-dedup window on the md5 key.  The quality gate, repetition
+included, is one in-row filter after it, and the split is an in-row
+hash; both are SQL text built once at import.  The split write is
 ``partitionBy("split")`` so downstream readers partition-prune to
 their fold.  The facade runs the DAG once, in that write, and caches
 nothing: the manifest aggregates the corpus read back with its known
@@ -29,9 +28,61 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..functions import text as T
-from ..operators.datamix import split_assignment
+from ..functions.text import STOPWORDS
+from ..operators.sampling import _MOD
 from . import dedup as D
+
+# Gate thresholds, tuned on the sf0.01 metric distributions so every
+# reason actually fires on the fixtures (punct is ~0 on the synthetic
+# corpus; the branch exists for real-world text).
+_GATE_MIN_TOKENS = 20
+_GATE_MAX_PUNCT = 0.1
+_GATE_MIN_STOPWORD = 0.02
+_GATE_MAX_DUP_2GRAM = 0.09
+
+# The gate is SQL text, not a Column tree: each ``functions`` call is a
+# py4j round trip (transforms/netflix.py measures the difference).
+# __tk is functions/text.tokens(lower(text)).
+_TOKENS = "filter(split(lower(text), ' +'), t -> t != '') AS __tk"
+# Fraction of the adjacent 2-grams that repeat an earlier one.  The
+# grams zip two shifted slices, so __tk appears only outside lambdas:
+# when the optimizer inlines it into a filter, tokenizing costs a few
+# evaluations per row, not one per element.
+_N_GRAMS = "greatest(size(__tk) - 1, 0)"
+_DUP = (
+    f"CASE WHEN {_N_GRAMS} > 0 THEN 1.0D - size(array_distinct(zip_with("
+    f"slice(__tk, 1, {_N_GRAMS}), slice(__tk, 2, {_N_GRAMS}), "
+    f"(a, b) -> concat_ws(' ', a, b)))) / CAST({_N_GRAMS} AS DOUBLE) ELSE 0.0D END"
+)
+_PUNCT = (
+    "CASE WHEN length(text) > 0 THEN length(regexp_replace(text, "
+    "'[A-Za-z0-9 ]', '')) / length(text) ELSE 0.0D END"
+)
+_STOP_IN = ", ".join(f"'{w}'" for w in STOPWORDS)
+_STOP = (
+    f"CASE WHEN size(__tk) > 0 THEN size(filter(__tk, t -> t IN ({_STOP_IN}))) "
+    "/ size(__tk) ELSE 0.0D END"
+)
+# (reason, pass condition), cheapest first: the curation filter ANDs
+# them, q_text_quality_gate reports the first that fails.
+_GATE_CHECKS = (
+    ("too_short", f"size(__tk) >= {_GATE_MIN_TOKENS}"),
+    ("high_punct", f"{_PUNCT} <= {_GATE_MAX_PUNCT}D"),
+    ("low_stopword", f"{_STOP} >= {_GATE_MIN_STOPWORD}D"),
+    ("repetitive", f"{_DUP} <= {_GATE_MAX_DUP_2GRAM}D"),
+)
+_GATE = " AND ".join(check for _, check in _GATE_CHECKS)
+# operators/datamix.split_assignment(doc_id): the md5 hash gate salted
+# 'split', buckets 0-79 train, 80-89 val, 90-99 test.
+_BUCKET = (
+    "CAST(CAST(conv(substring(md5(CAST(concat_ws('|', 'split', "
+    "CAST(doc_id AS STRING)) AS BINARY)), 1, 15), 16, 10) AS BIGINT) "
+    f"% {_MOD} % 100 AS INT)"
+)
+_SPLIT = (
+    f"CASE WHEN {_BUCKET} < 80 THEN 'train' WHEN {_BUCKET} < 90 THEN 'val' "
+    "ELSE 'test' END AS split"
+)
 
 
 @dataclass
@@ -46,63 +97,24 @@ def curated_docs(docs: DataFrame) -> DataFrame:
     """exact dedup -> C4/Gopher quality gate -> deterministic split.
 
     Returns the kept docs as (doc_id, source, text, n_tok, split).
-    Thresholds are the q_text_quality_gate constants; the split is the
-    same md5 hash gate as q_split_train_val_test.
+    The gate is q_text_quality_gate's, its repetition test included;
+    the split is the same md5 hash gate as q_split_train_val_test.
     """
-    from ..queries.textops import (
-        _GATE_MAX_DUP_2GRAM,
-        _GATE_MAX_PUNCT,
-        _GATE_MIN_STOPWORD,
-        _GATE_MIN_TOKENS,
+    return (
+        D.exact_dedup(docs)
+        .selectExpr("doc_id", "source", "text", _TOKENS)
+        .where(_GATE)
+        .selectExpr("doc_id", "source", "text", "size(__tk) AS n_tok", _SPLIT)
     )
-
-    deduped = D.exact_dedup(docs)
-    base = deduped.select(
-        "doc_id",
-        "source",
-        "text",
-        T.tokens(F.lower(F.col("text"))).alias("__tk"),
-    )
-    n_tok = F.size("__tk")
-    cheap = base.filter(
-        (n_tok >= _GATE_MIN_TOKENS)
-        & (T.punct_ratio(F.col("text")) <= _GATE_MAX_PUNCT)
-        & (T.stopword_ratio(F.col("text")) >= _GATE_MIN_STOPWORD)
-    ).select("doc_id", "source", "text", n_tok.alias("n_tok"), "__tk")
-    grams = cheap.select(
-        "doc_id",
-        F.explode_outer(T.word_ngrams_from_tokens(F.col("__tk"), 2)).alias(
-            "g"
-        ),
-    ).filter(F.col("g").isNotNull())
-    not_repetitive = (
-        grams.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_g"),
-            F.count_distinct("g").alias("n_d"),
-        )
-        .filter(
-            F.lit(1.0) - F.col("n_d") / F.col("n_g") <= _GATE_MAX_DUP_2GRAM
-        )
-        .select("doc_id")
-    )
-    kept = cheap.select("doc_id", "source", "text", "n_tok").join(
-        not_repetitive, "doc_id"
-    )
-    _bucket, split = split_assignment(F.col("doc_id").cast("string"))
-    return kept.withColumn("split", split)
 
 
 def curation_manifest(curated: DataFrame) -> DataFrame:
     """Per-(split, source) doc and token counts over :func:`curated_docs`
-    output -- the rollup q_training_data_pipeline oracle-checks."""
-    return (
-        curated.groupBy("split", "source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tok").alias("total_tokens"),
-        )
-        .orderBy("split", "source")
+    output -- the rollup q_training_data_pipeline oracle-checks.
+    Unordered: the query sorts it, the facade sorts the collected rows."""
+    return curated.groupBy("split", "source").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_tok").alias("total_tokens"),
     )
 
 
@@ -138,7 +150,11 @@ def run_curation_pipeline(
         reader = spark.read.schema(curated.schema)
         kept = reader.parquet(corpus_out).select(*curated.columns)
     manifest = curation_manifest(kept)
-    rows = [r.asDict() for r in manifest.collect()]
+    # One row per (split, source); sorted here, not by a range exchange.
+    rows = sorted(
+        (r.asDict() for r in manifest.collect()),
+        key=lambda r: (r["split"], r["source"] is not None, r["source"] or ""),
+    )
     arrow = pa.Table.from_pylist(rows, schema=to_arrow_schema(manifest.schema))
     manifest = spark.createDataFrame(arrow, manifest.schema)
     if manifest_out:

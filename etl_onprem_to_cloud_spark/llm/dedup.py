@@ -2,9 +2,10 @@
 
 Four families, each chosen for a different scale/recall point:
 
-1. **Exact** -- md5 content fingerprint, hash groupBy.  One shuffle on a
-   16-byte key; at 100 TB this is the cheapest possible dedup (the
-   shuffle carries only (fingerprint, doc_id)).
+1. **Exact** -- md5 content fingerprint.  One shuffle on the md5 key:
+   the duplicate-group report carries only (fingerprint, doc_id), and
+   the keep-min-id filter is a window over that same key, so the rows
+   cross the exchange once and never meet a join.
 2. **MinHash + LSH** -- per-doc signatures computed *narrowly* (array_min
    over transform: zero shuffles for signatures), then banded: docs
    sharing any band key become candidate pairs, verified with exact
@@ -134,12 +135,23 @@ def exact_duplicate_groups(
 def exact_dedup(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Keep the min-id doc per content fingerprint.  Implemented as a
-    min-by aggregation (one shuffle on the fingerprint), then a
-    broadcast-free semi-join back on (fingerprint is dropped)."""
-    fp = docs.withColumn("__fp", doc_fingerprint(F.col(text_col)))
-    keep = fp.groupBy("__fp").agg(F.min(id_col).alias(id_col))
-    return fp.join(keep, ["__fp", id_col], "left_semi").drop("__fp")
+    """Keep the min-id doc per content fingerprint: the rows whose id
+    equals ``min(id) OVER (PARTITION BY fingerprint)``.  One pass: a
+    single exchange on the fingerprint that carries the input columns
+    and the 32-char md5 key, with no aggregate and no join back.  Rows
+    that share the min id all survive; a null id never equals the min,
+    so it drops.  Built as SQL text (the fingerprint is
+    functions/text.doc_fingerprint): three DataFrame calls, not a py4j
+    round trip per function call."""
+    fp = (
+        f"md5(CAST(concat_ws(' ', filter(split(lower({text_col}), ' +'), "
+        "t -> t != '')) AS BINARY))"
+    )
+    return (
+        docs.selectExpr("*", f"min({id_col}) OVER (PARTITION BY {fp}) AS __min")
+        .where(f"{id_col} = __min")
+        .drop("__min")
+    )
 
 
 # --------------------------------------------------------------------------

@@ -225,16 +225,14 @@ ORDER BY split, source
     tags=("ring-c", "pipeline", "dedup", "quality", "mixture"),
     description=(
         "The training-data prep pipeline END-TO-END in one Spark plan: "
-        "exact dedup (md5 fingerprint min-by) -> C4/Gopher quality gate "
-        "(same thresholds as q_text_quality_gate) -> deterministic "
+        "exact dedup (rows whose id is the min id of their md5 "
+        "fingerprint, one window) -> C4/Gopher quality gate (same "
+        "thresholds as q_text_quality_gate) -> deterministic "
         "train/val/test split (same hash gate as q_split_train_val_test) "
-        "-> per-(split, source) doc and token counts.  The repetition "
-        "predicate runs as an exploded aggregation (generate once, "
-        "partial-agg, keep-join) rather than an in-row filter -- the "
-        "filter form pushdown-inlines the gram construction into "
-        "per-element re-evaluation (measured 17s vs 2.6s at sf0.1); "
-        "cheap single-pass predicates stay in-row.  Running the whole "
-        "pipeline in one engine means one scan feeds every stage."
+        "-> per-(split, source) doc and token counts.  One scan feeds "
+        "every stage; the gate, repetition test included, is one in-row "
+        "filter, so the dedup window's exchange is the only one before "
+        "the rollup."
     ),
 )
 def q_training_data_pipeline(spark, sf_dir):
@@ -242,12 +240,12 @@ def q_training_data_pipeline(spark, sf_dir):
     (llm/curate.py): this query reports curation_manifest(curated_docs)
     and run_curation_pipeline writes the same stages to sinks -- the
     oracle-checked rollup and the shipped corpus cannot drift.  Plan
-    notes (exploded-aggregation repetition gate, single shared scan)
-    live on curate.curated_docs."""
+    notes (one scan, one dedup exchange, in-row gate from SQL text)
+    live on llm/curate.py."""
     from ..llm.curate import curated_docs, curation_manifest
 
     docs = cat(spark, sf_dir).documents
-    return curation_manifest(curated_docs(docs))
+    return curation_manifest(curated_docs(docs)).orderBy("split", "source")
 
 
 

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import davg_round
 from ..functions import text as T
+from ..llm import curate as C
 from ..llm import dedup as D
 from ..llm.multimodal import (
     attach_binary_payload,
@@ -1013,13 +1014,12 @@ def q_text_repetition(spark, sf_dir):
     )
 
 
-# Gate thresholds, tuned on the sf0.01 metric distributions so every
-# reason actually fires on the fixtures (punct is ~0 on the synthetic
-# corpus; the branch exists for real-world text).
-_GATE_MIN_TOKENS = 20
-_GATE_MAX_PUNCT = 0.1
-_GATE_MIN_STOPWORD = 0.02
-_GATE_MAX_DUP_2GRAM = 0.09
+# The curation gate's checks, reported as the first one that fails.
+_GATE_REASON = (
+    "CASE "
+    + " ".join(f"WHEN NOT ({check}) THEN '{r}'" for r, check in C._GATE_CHECKS)
+    + " ELSE 'kept' END"
+)
 
 
 @query(
@@ -1048,10 +1048,10 @@ m AS (
 r AS (
   SELECT doc_id, n_tok, dup,
     CASE
-      WHEN n_tok < {_GATE_MIN_TOKENS} THEN 'too_short'
-      WHEN punct > {_GATE_MAX_PUNCT} THEN 'high_punct'
-      WHEN stop < {_GATE_MIN_STOPWORD} THEN 'low_stopword'
-      WHEN dup > {_GATE_MAX_DUP_2GRAM} THEN 'repetitive'
+      WHEN n_tok < {C._GATE_MIN_TOKENS} THEN 'too_short'
+      WHEN punct > {C._GATE_MAX_PUNCT} THEN 'high_punct'
+      WHEN stop < {C._GATE_MIN_STOPWORD} THEN 'low_stopword'
+      WHEN dup > {C._GATE_MAX_DUP_2GRAM} THEN 'repetitive'
       ELSE 'kept'
     END AS reason
   FROM m
@@ -1063,38 +1063,19 @@ FROM r
     tags=("text", "ring-c", "quality", "filter"),
     description="C4/Gopher-style composite quality gate: first-failing-"
     "reason per doc (too_short -> high_punct -> low_stopword -> "
-    "repetitive -> kept).  Entirely per-row expressions over "
-    "materialized token/2-gram arrays -- no shuffle, no UDF; the whole "
-    "gate runs in one codegen'd projection at any corpus size.",
+    "repetitive -> kept).  Entirely per-row expressions over the "
+    "materialized token array, the SQL text of the curation filter "
+    "(llm/curate.py) -- no shuffle, no UDF; the whole gate runs in one "
+    "projection at any corpus size.",
 )
 def q_text_quality_gate(spark, sf_dir):
-    docs = cat(spark, sf_dir).documents
-    tk = docs.select(
-        "doc_id", "text", T.tokens(F.lower(F.col("text"))).alias("__tk")
-    )
-    gr = tk.select(
+    docs = cat(spark, sf_dir).documents.selectExpr("doc_id", "text", C._TOKENS)
+    return docs.selectExpr(
         "doc_id",
-        "text",
-        "__tk",
-        T.word_ngrams_from_tokens(F.col("__tk"), 2).alias("__gr"),
-    )
-    n_tok = F.size("__tk")
-    dup = T.dup_ngram_fraction(F.col("__gr"))
-    punct = T.punct_ratio(F.col("text"))
-    stop = T.stopword_ratio(F.col("text"))
-    reason = (
-        F.when(n_tok < _GATE_MIN_TOKENS, "too_short")
-        .when(punct > _GATE_MAX_PUNCT, "high_punct")
-        .when(stop < _GATE_MIN_STOPWORD, "low_stopword")
-        .when(dup > _GATE_MAX_DUP_2GRAM, "repetitive")
-        .otherwise("kept")
-    )
-    return gr.select(
-        "doc_id",
-        n_tok.cast("bigint").alias("n_tokens"),
-        F.round(dup, 6).cast("double").alias("dup_2gram_frac"),
-        reason.alias("reason"),
-        (reason == "kept").alias("kept"),
+        "CAST(size(__tk) AS BIGINT) AS n_tokens",
+        f"CAST(round({C._DUP}, 6) AS DOUBLE) AS dup_2gram_frac",
+        f"{_GATE_REASON} AS reason",
+        f"{_GATE_REASON} = 'kept' AS kept",
     )
 
 

@@ -29,6 +29,9 @@ def main() -> None:
     for name in HEADLINE:
         df = QUERIES[name].fn(spark, sf_dir)
         plan = explain_str(df, "simple").strip()
+        # Counted before the run: an executed adaptive plan prints its
+        # final and initial plans, and each exchange would count twice.
+        exchanges = shuffle_count(df)
         # Executed metrics, not just the declared plan: what the
         # exchanges actually moved, and whether anything spilled.
         try:
@@ -43,7 +46,7 @@ def main() -> None:
         except Exception as e:  # pragma: no cover - metrics are best-effort
             measured = f"Measured: unavailable ({e})"
         out += [f"## {name}", "",
-                f"Exchanges: {shuffle_count(df)}", "",
+                f"Exchanges: {exchanges}", "",
                 measured, "",
                 "```", plan, "```", ""]
     path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

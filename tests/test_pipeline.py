@@ -263,7 +263,8 @@ def _group_plans(spark, group, recent=100):
 
 def test_curation_pipeline_runs_dag_once(spark, sf_dir, tmp_path):
     """With both sinks the corpus write is the one run of the curation
-    DAG: nothing is cached, the build stays within its job budget, and
+    DAG, and that run is one scan: nothing is cached, the repetition
+    gate generates no rows, the build stays within its job budget, and
     the returned manifest is a local relation whose collect() runs no
     job."""
     from etl_onprem_to_cloud_spark.llm.curate import run_curation_pipeline
@@ -278,13 +279,25 @@ def test_curation_pipeline_runs_dag_once(spark, sf_dir, tmp_path):
         )
     finally:
         sc.setJobGroup(None, None)
-    # 13 at sf0.001; caching the corpus, or computing the manifest again
-    # for its sink, costs more.
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 14
+    # 7 at sf0.001; caching the corpus, computing the manifest again for
+    # its sink, or a second documents scan costs more.
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 7
 
     plans = _group_plans(spark, group)
     assert any("n_docs" in p for p in plans), plans
     assert not any("InMemoryTableScan" in p for p in plans), plans
+    # The formatted plan details each node once, in its own paragraph.
+    (write,) = [
+        p for p in plans if "documents.parquet" in p and "InsertIntoHadoop" in p
+    ]
+    scans = [
+        node
+        for node in write.split("\n\n")
+        if re.match(r"\(\d+\) Scan parquet", node.strip())
+        and "documents.parquet" in node
+    ]
+    assert len(scans) == 1, write
+    assert "Generate" not in write, write
 
     plan = res.manifest._jdf.queryExecution().executedPlan().toString()
     assert plan.startswith("LocalTableScan"), plan
@@ -296,3 +309,109 @@ def test_curation_pipeline_runs_dag_once(spark, sf_dir, tmp_path):
         sc.setJobGroup(None, None)
     assert sc.statusTracker().getJobIdsForGroup(group) == []
     assert sum(r["n_docs"] for r in rows) == res.rows_kept
+
+
+def test_curated_docs_build_round_trips(spark, sf_dir, monkeypatch):
+    """The curation DAG is built from SQL text: its build makes a few
+    dozen py4j round trips, not several per ``functions`` call."""
+    from py4j.clientserver import ClientServerConnection
+
+    from etl_onprem_to_cloud_spark.llm.curate import curated_docs
+
+    docs = _documents(spark, sf_dir)
+    curated_docs(docs)  # first build: session conf lookups
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counted(self, *args, **kwargs):
+        calls.append(1)
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    curated_docs(docs)
+    monkeypatch.undo()
+    assert len(calls) <= 40, len(calls)
+
+
+def _words(tag, n):
+    return [f"{tag}w{i}" for i in range(n)]
+
+
+def _repetitive(tag, repeats, n_grams=100):
+    """A doc of ``n_grams`` 2-grams of which exactly ``repeats`` repeat
+    an earlier one (dup fraction repeats / n_grams): distinct words,
+    then the first ``repeats + 1`` of them again."""
+    distinct = ["the", "of", "and"] + _words(tag, n_grams - repeats - 3)
+    return " ".join(distinct + distinct[: repeats + 1])
+
+
+def test_training_data_pipeline_edge_cases_match_oracle(spark, tmp_path):
+    """q_training_data_pipeline equals its DuckDB oracle on a hand-made
+    corpus of the gate's and the dedup's edge cases, and the facade's
+    manifest keeps the query's order, null source included."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from test_oracle_parity import _normalize, _values_equal
+
+    from etl_onprem_to_cloud_spark.llm.curate import run_curation_pipeline
+    from etl_onprem_to_cloud_spark.queries import QUERIES
+    from etl_onprem_to_cloud_spark.schemas import FIXTURE_TABLES
+    from etl_onprem_to_cloud_spark.sources.io import read_parquet
+
+    base = " ".join(["the"] + _words("a", 29))
+    docs = [
+        (1, None, "src_a"),  # null text
+        (2, "", "src_a"),  # empty text
+        (3, "the cat sat on the mat", "src_a"),  # under 20 tokens
+        (4, base + " " + "!" * 40, "src_b"),  # punctuation
+        (10, base, "src_a"),
+        (11, base.upper(), "src_b"),  # case-only duplicate of 10
+        (12, "  " + base.replace(" ", "   ") + " ", "src_a"),  # whitespace
+        (30, " ".join(["the"] + _words("c", 24)), "src_b"),  # same id,
+        (30, " ".join(["the"] + _words("c", 24)), "src_b"),  # same text
+        (31, " ".join(["and"] + _words("d", 24)), None),  # null source
+        (40, _repetitive("f", 8), "src_a"),  # dup 0.08: kept
+        (41, _repetitive("g", 9), "src_b"),  # dup 0.09: at the cut, kept
+        (42, _repetitive("h", 10), "src_a"),  # dup 0.10: dropped
+    ]
+    schema = FIXTURE_TABLES["documents"]
+    rows = [
+        {"doc_id": i, "text": t, "lang": "en", "source": s,
+         "n_chars": None if t is None else len(t)}
+        for i, t, s in docs
+    ]
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=to_arrow_schema(schema)),
+        tmp_path / "documents.parquet",
+    )
+
+    spec = QUERIES["q_training_data_pipeline"]
+    got = spec.fn(spark, str(tmp_path))
+    got_rows = [tuple(r) for r in got.collect()]
+    # 10, both 30s, 31, 40 and 41
+    assert sum(r[got.columns.index("n_docs")] for r in got_rows) == 6
+
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{tmp_path / 'documents.parquet'}')"
+        )
+        o = con.execute(spec.oracle)
+        o_cols = [d[0] for d in o.description]
+        o_rows = o.fetchall()
+    finally:
+        con.close()
+    s_norm, cols = _normalize(got_rows, got.columns)
+    o_norm, o_sorted_cols = _normalize(o_rows, o_cols)
+    assert cols == o_sorted_cols
+    assert len(s_norm) == len(o_norm), (s_norm, o_norm)
+    for sr, orow in zip(s_norm, o_norm):
+        assert all(_values_equal(a, b) for a, b in zip(sr, orow)), (sr, orow)
+
+    res = run_curation_pipeline(
+        read_parquet(spark, str(tmp_path / "documents.parquet"))
+    )
+    assert [tuple(r) for r in res.manifest.collect()] == got_rows

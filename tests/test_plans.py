@@ -298,12 +298,10 @@ def test_r04_queries_bounded_shuffles_no_udf(name, max_shuffles, spark, sf_dir):
     # q_bigram_lm_logprob: bigram-count agg, two vocab joins, per-doc
     # agg, final left join; vocab size is a 1-row broadcast.
     ("q_bigram_lm_logprob", 5),
-    # End-to-end prep pipeline: dedup agg + semi-join, the exploded
-    # repetition aggregation + its keep-join, final rollup.  More
-    # exchanges than the all-projection form but 7x faster: a filter
-    # on the in-row dup fraction pushdown-inlines the gram
-    # construction into per-element re-evaluation.
-    ("q_training_data_pipeline", 6),
+    # End-to-end prep pipeline: the exact-dedup window on the md5 key,
+    # the rollup, the final orderBy.  The quality gate, repetition
+    # included, is an in-row filter and adds none.
+    ("q_training_data_pipeline", 3),
     # q_embedding_outliers: exploded (label, idx) centroid agg, the
     # rejoin, per-vec agg, label-norm join.
     ("q_embedding_outliers", 5),
