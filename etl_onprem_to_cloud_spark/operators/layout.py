@@ -21,82 +21,72 @@ work.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+
+from ..session import non_adaptive_session
 
 
 def spread_input(df: DataFrame, key_col: str) -> DataFrame:
     """Spread an under-partitioned input across the cluster parallelism
-    before a CPU-heavy map/explode stage (r10 optimization, guide §2.5
-    "input skew": one compact file -> one scan task that no core count
-    can split, because parquet scans are row-group-atomic).  The
-    canonical form of the auto-detect idiom also inlined in
-    ``llm/dedup._exploded_shingles``: well-partitioned inputs -- the
-    100 TB case -- skip the shuffle entirely, so nothing here is tuned
-    to local mode.  Hashing on a stable key keeps the spread
-    deterministic under retries; hashing on a self-join's key also
-    lets both join sides share the one (reused) exchange.
+    before a CPU-heavy map/explode stage: one compact file is one scan
+    task that no core count can split, because parquet scans are
+    row-group-atomic.  Well-partitioned inputs -- the 100 TB case --
+    skip the shuffle entirely, so nothing here is tuned to local mode.
+    Hashing on a stable key keeps the spread deterministic under
+    retries; hashing on a self-join's key also lets both join sides
+    share the one (reused) exchange.
 
-    Cost note (r11 ADVICE): ``df.rdd.getNumPartitions()`` forces a
-    full non-AQE physical planning of the input subtree at query-BUILD
-    time (no job runs).  Acceptable for the scan-adjacent projections
-    every current call site passes; if this is ever applied
-    mid-pipeline to a deep subtree, derive the partition count from
-    the leaf scan instead of planning the whole tree."""
+    ``df.rdd.getNumPartitions()`` plans the input subtree (without AQE)
+    at query-build time; no job runs.  That is cheap for the
+    scan-adjacent projections every call site passes; applied to a deep
+    mid-pipeline subtree, derive the count from the leaf scan instead."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         df = df.repartition(target, F.col(key_col))
     return df
 
 
-def ckpt_partitioned(
-    df: DataFrame,
-    key_col: str,
-    num_partitions: int | None = None,
-    storage_level=None,
-) -> DataFrame:
-    """Eager localCheckpoint hash-partitioned by ``key_col`` with the
-    partitioning VISIBLE to downstream planning (r11 optimization,
-    guide §2.4 "two operations keyed the same way can share one
-    exchange").
+def ckpt_partitioned(df: DataFrame, key_col: str, storage_level=None) -> DataFrame:
+    """Eager localCheckpoint hash-partitioned by ``key_col``, with the
+    partitioning visible to downstream planning, so a loop that joins
+    this static relation on the same key every round shuffles only the
+    side that changed.
 
-    The iterative graph loops (CC min-label, LPA, BFS, Bellman-Ford)
-    join a STATIC checkpointed relation on the SAME key every round,
-    yet re-shuffled it every round: ``Dataset.localCheckpoint``
-    captures ``physicalPlan.outputPartitioning``, and under AQE the
-    physical plan is an ``AdaptiveSparkPlanExec`` whose partitioning
-    reports ``UnknownPartitioning`` -- so the checkpoint forgets its
-    layout and EnsureRequirements re-inserts an edge-wide Exchange in
-    every consumer (``tests/test_plans.py::
-    test_ckpt_partitioned_skips_exchange_on_checkpointed_side`` pins
-    this: the plain checkpoint side is re-shuffled, this helper's is
-    not).  Planning this one repartition-then-checkpoint with AQE
-    momentarily OFF makes the stored ``hashpartitioning(key, n)``
-    stick, so per-round joins shuffle only the side that changed.
-    The AQE loss is confined to the trivial plan built here (a scan +
-    one exchange -- nothing for AQE to do); callers checkpoint any
-    expensive build subtree FIRST, with AQE on, as before.
+    ``localCheckpoint`` stores the physical plan's output partitioning,
+    and under AQE that is ``UnknownPartitioning``, so a plain checkpoint
+    forgets its layout and every consumer re-shuffles it
+    (``tests/test_plans.py::
+    test_ckpt_partitioned_skips_exchange_on_checkpointed_side``).  The
+    repartition and checkpoint are therefore planned in a non-adaptive
+    child session (``session.non_adaptive_session``) and the result is
+    moved back into ``df``'s session; that session's configuration is
+    never written.  Callers checkpoint any expensive build subtree first,
+    with AQE on.
 
-    Scale shape: the partition count defaults to the relation's OWN
-    current partition count -- i.e. whatever AQE already sized the
-    upstream materialization to -- so the stored layout is
-    scale-adaptive by construction (a handful of partitions at bench
-    density, cluster-wide at 100 TB; a fixed defaultParallelism here
-    measured ~0.4 s SLOWER per iterative query at sf0.1 from 32-task
-    round stages over KB-sized data).  Each round's node-sized side
-    shuffles TO the stored layout, which is exactly the Pregel-style
-    static-edge placement.  Deterministic: hash partitioning on a
-    stable key."""
+    The partition count is the relation's own current count -- whatever
+    AQE sized the upstream materialization to -- so the stored layout
+    scales with the data.  Deterministic: hash partitioning on a stable
+    key."""
     spark = df.sparkSession
-    n = num_partitions or max(1, df.rdd.getNumPartitions())
+    n = max(1, df.rdd.getNumPartitions())
     kwargs = {"eager": True}
     if storage_level is not None:
         kwargs["storageLevel"] = storage_level
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return df.repartition(n, F.col(key_col)).localCheckpoint(**kwargs)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    child = non_adaptive_session(spark)
+    ckpt = (
+        _in_session(df, child)
+        .repartition(n, F.col(key_col))
+        .localCheckpoint(**kwargs)
+    )
+    return _in_session(ckpt, spark)
+
+
+def _in_session(df: DataFrame, session: SparkSession) -> DataFrame:
+    """``df``'s logical plan as a DataFrame of ``session``."""
+    jdf = session._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        session._jsparkSession, df._jdf.logicalPlan()
+    )
+    return DataFrame(jdf, session)
 
 
 def morton_code(x: Column, y: Column, bits: int = 8) -> Column:

@@ -25,6 +25,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..pinned import release_pinned
+
 
 @dataclass
 class QuerySpec:
@@ -36,9 +38,6 @@ class QuerySpec:
 
 QUERIES: dict[str, QuerySpec] = {}
 
-# Name of the most recently CALLED registered query (pin-release gate).
-_LAST_CALLED: str | None = None
-
 
 def query(
     name: str,
@@ -47,33 +46,15 @@ def query(
     description: str = "",
 ):
     def deco(fn):
-        # Drain the pin() registry whenever a DIFFERENT registered
-        # query is called: the correctness driver runs ~50 queries
-        # through one session with no release hook of its own, and the
-        # previous query's result is always materialized before the
-        # next call, so releasing here keeps cached intermediates from
-        # accumulating anywhere.  Repeat calls of the SAME query (the
-        # bench's best-of-N) keep their cache, preserving the r01-r03
-        # timing methodology; bench/tests still release explicitly
-        # after each query's runs.  Unpersist is never a correctness
-        # risk (recompute always works), so a caller interleaving two
-        # lazy queries merely loses a cache, not data.
-        #
-        # SINGLE-THREADED BY DESIGN (ADVICE r4): _LAST_CALLED and the
-        # shared pin registry are module globals with no lock.  Every
-        # harness that exists (driver, bench, pytest, rehearsal) calls
-        # registered queries sequentially from one thread.  A parallel
-        # driver would need a lock around this gate -- without one, two
-        # threads would race and unpersist each other's caches mid-
-        # build (a recompute cost, never a wrong answer).
+        # Every call first releases the calling thread's earlier pins
+        # (pinned.py): a caller has materialized the previous result
+        # before it builds the next one, so cached intermediates never
+        # accumulate and no harness needs a release hook.  Pins are
+        # per thread, so a call never touches another thread's cache;
+        # a repeat of the same query rebuilds from a cold cache.
         @functools.wraps(fn)
         def wrapped(spark, sf_dir):
-            global _LAST_CALLED
-            if _LAST_CALLED != name:
-                from ..pinned import release_pinned
-
-                release_pinned()
-                _LAST_CALLED = name
+            release_pinned()
             return fn(spark, sf_dir)
 
         QUERIES[name] = QuerySpec(wrapped, oracle, tags, description)
@@ -124,7 +105,7 @@ from . import finance  # noqa: E402,F401
 # registry's 50-entry prefix, and the stalest evidence is now the
 # oldest driver row -- 48 entries' most recent rows date to r01 and 2
 # to early r02, while shared infrastructure those queries run through
-# (the pin-release gate above, session confs, numeric helpers) has
+# (the pin release above, session confs, numeric helpers) has
 # changed for five rounds since.  The prefix below is exactly those
 # 50, ordered by (latest driver-row round, position within that
 # round's CORRECTNESS file); re-verifying them empties the r01

@@ -76,10 +76,3 @@ def duck_dsum(col_expr: str, alias: str, round_to: int = 2) -> str:
         f"CAST(round(sum(CAST({col_expr} AS DECIMAL(18,6))), {round_to}) AS DOUBLE)"
         f" AS {alias}"
     )
-
-
-def duck_davg(col_expr: str, alias: str, round_to: int = 4) -> str:
-    return (
-        f"round(CAST(sum(CAST({col_expr} AS DECIMAL(18,6))) AS DOUBLE)"
-        f" / count({col_expr}), {round_to}) AS {alias}"
-    )

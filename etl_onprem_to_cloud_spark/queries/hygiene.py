@@ -170,12 +170,9 @@ def q_incremental_ingest_dedup(spark, sf_dir):
 @query(
     "q_training_data_pipeline",
     oracle=f"""
-WITH keep AS (
-  SELECT min(doc_id) AS doc_id FROM documents
-  GROUP BY md5(array_to_string({_TOKS}, ' '))
-),
-d AS (
-  SELECT documents.* FROM documents JOIN keep USING (doc_id)
+WITH d AS (
+  SELECT * FROM documents
+  QUALIFY doc_id = min(doc_id) OVER (PARTITION BY md5(array_to_string({_TOKS}, ' ')))
 ),
 t AS (
   SELECT doc_id, source, text, {_TOKS} AS toks FROM d

@@ -150,3 +150,12 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def non_adaptive_session(spark: SparkSession) -> SparkSession:
+    """A child of ``spark`` with AQE off: it shares the SparkContext and
+    the cache but has its own SQL conf, so planning in it leaves
+    ``spark``'s configuration untouched."""
+    child = spark.newSession()
+    child.conf.set("spark.sql.adaptive.enabled", "false")
+    return child

@@ -204,8 +204,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if cached is not None:
         return cached
     schema = FIXTURE_TABLES[name]
-    # A non-UTC session time zone would shift every formatted timestamp.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     df = spark.read.schema(schema).parquet(os.path.join(sf_dir, f"{name}.parquet"))
     _TABLE_CACHE[key] = df
     return df

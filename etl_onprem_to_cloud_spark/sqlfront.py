@@ -35,9 +35,3 @@ def create_views(spark: SparkSession, sf_dir: str) -> list[str]:
     for t in FIXTURE_TABLES:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return list(FIXTURE_TABLES)
-
-
-def run_sql(spark: SparkSession, sf_dir: str, sql: str):
-    """One-call convenience: register views, run one SQL text."""
-    create_views(spark, sf_dir)
-    return spark.sql(sql)

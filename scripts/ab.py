@@ -33,7 +33,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import calibrate  # noqa: E402
 from check_query import result_hash  # noqa: E402
-from etl_onprem_to_cloud_spark.pinned import release_pinned  # noqa: E402
 from etl_onprem_to_cloud_spark.queries import QUERIES  # noqa: E402
 from etl_onprem_to_cloud_spark.session import get_spark  # noqa: E402
 
@@ -75,7 +74,6 @@ def run(spark, name: str, sf_dir: str) -> tuple[float, str]:
     df = QUERIES[name].fn(spark, sf_dir)
     rows = [tuple(r) for r in df.collect()]
     dt = time.perf_counter() - t0
-    release_pinned()
     return dt, result_hash(rows, df.columns)
 
 

@@ -25,7 +25,6 @@ import duckdb  # noqa: E402
 from conftest import SF_DIR  # noqa: E402
 from test_oracle_parity import _normalize, _values_equal  # noqa: E402
 
-from etl_onprem_to_cloud_spark.pinned import release_pinned  # noqa: E402
 from etl_onprem_to_cloud_spark.queries import QUERIES  # noqa: E402
 from etl_onprem_to_cloud_spark.schemas import FIXTURE_TABLES  # noqa: E402
 from etl_onprem_to_cloud_spark.session import get_spark  # noqa: E402
@@ -79,7 +78,6 @@ def main() -> int:
     for sf_dir in sf_dirs:
         sdf = spec.fn(spark, sf_dir)
         cols, rows = sdf.columns, [tuple(r) for r in sdf.collect()]
-        release_pinned()
         print(f"{name} {sf_dir} rows={len(rows)} hash={result_hash(rows, cols)}")
         if spec.oracle is None:
             print(f"{name}: rows-only query, cols={cols}")

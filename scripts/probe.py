@@ -58,7 +58,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from bench import HEADLINE  # noqa: E402
-from etl_onprem_to_cloud_spark.pinned import release_pinned  # noqa: E402
 from etl_onprem_to_cloud_spark.plans import (  # noqa: E402
     execution_metrics,
     explain_str,
@@ -143,7 +142,6 @@ def _best_of(spark, name: str, sf_dir: str, args):
                 plan = explain_str(df, "formatted")
             best = (t, m, plan)
         del df  # the sweep can only reclaim shuffles no plan references
-        release_pinned()
         if args.fresh_jvm:
             _sweep(spark)
     return best
@@ -194,11 +192,9 @@ def main() -> int:
             spark = _fresh_session(spark)
         try:
             execution_metrics(_build(spark, name, warm, args.sql))
-            release_pinned()
             legs = [_best_of(spark, name, d, args) for d in args.dirs]
         except Exception as e:  # noqa: BLE001 - one failure is a finding
             traceback.print_exc()
-            release_pinned()
             failed = True
             results[name] = {"error": f"{type(e).__name__}: {e}"}
             print(f"| {name} | FAILED: {type(e).__name__}: {e} |", flush=True)

@@ -372,6 +372,8 @@ def test_training_data_pipeline_edge_cases_match_oracle(spark, tmp_path):
         (30, " ".join(["the"] + _words("c", 24)), "src_b"),  # same id,
         (30, " ".join(["the"] + _words("c", 24)), "src_b"),  # same text
         (31, " ".join(["and"] + _words("d", 24)), None),  # null source
+        (31, " ".join(["and"] + _words("d", 24)), "src_a"),  # id 31 is the
+        (31, " ".join(["and"] + _words("e", 24)), None),  # min of two groups
         (40, _repetitive("f", 8), "src_a"),  # dup 0.08: kept
         (41, _repetitive("g", 9), "src_b"),  # dup 0.09: at the cut, kept
         (42, _repetitive("h", 10), "src_a"),  # dup 0.10: dropped
@@ -390,8 +392,8 @@ def test_training_data_pipeline_edge_cases_match_oracle(spark, tmp_path):
     spec = QUERIES["q_training_data_pipeline"]
     got = spec.fn(spark, str(tmp_path))
     got_rows = [tuple(r) for r in got.collect()]
-    # 10, both 30s, 31, 40 and 41
-    assert sum(r[got.columns.index("n_docs")] for r in got_rows) == 6
+    # 10, both 30s, the three 31s, 40 and 41
+    assert sum(r[got.columns.index("n_docs")] for r in got_rows) == 8
 
     con = duckdb.connect()
     try:
