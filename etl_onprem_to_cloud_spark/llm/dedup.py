@@ -367,36 +367,22 @@ def count_carry_jaccard(
     (r7 sf100, 5M docs): exponent 1.10 / 46 GB spill on the native
     path and a partition-local hash-build OOM on the MLlib twin.
 
-    ``cand`` is PINNED (pinned.py), ``exc`` deliberately is NOT -- a
-    lesson that took three sf100 measurements.  cand feeds three plan
-    branches (each union leg of the id prune + the verify join);
-    whether that re-executes its generator depends on whether the
-    generator's plan CANONICALIZES: the native banded self-join does,
-    so ReusedExchange already dedupes it, but the MLlib twin's
-    approxSimilarityJoin does not (MinHashLSH's hash UDF defeats
-    canonical equality) and re-ran up to 5x -- at sf0.1 that hid
-    inside a bench regression, at sf100 the repeated explode-join
-    shuffle writes ENOSPC'd a 62 GB disk budget.  Pinning cand is the
-    fix and is ~free for every caller: the candidate relation is
-    LSH-bounded and skinny (two ids), so the cache write is noise
-    where the generator is reusable and decisive where it is not
-    (twin sf100: fail -> 372.8 s / zero spill / 81 GB peak).  The
-    pruned posting stream (pa/pb) gets NO pin: both branches hang off
-    the same canonical semi-join whose corpus-sized exchange IS
-    reused, so a MEMORY_AND_DISK cache of the candidate-participating
-    postings only added I/O -- pinning it cost the native path
-    0.65 -> 0.76 at the sf100 probe and bought nothing.
-
-    A ``cand`` the caller ALREADY persisted keeps its own storage
-    level and unpersist ownership (re-persisting at a different level
-    raises Spark's "cannot change storage level" error, and a
-    registry pin of a caller-owned cache would double-release it);
-    every in-repo caller passes an unpersisted cand, so the harness
-    path always pins."""
-    from ..pinned import pin
-
-    if cand.storageLevel == StorageLevel.NONE:
-        cand = pin(cand, StorageLevel.MEMORY_AND_DISK)
+    ``cand`` is cut with an eager ``localCheckpoint``; ``exc``
+    deliberately is not.  cand feeds three plan branches (each union
+    leg of the id prune + the verify join); whether that re-executes
+    its generator depends on whether the generator's plan
+    CANONICALIZES: the native banded self-join does, so ReusedExchange
+    already dedupes it, but the MLlib twin's approxSimilarityJoin does
+    not (MinHashLSH's hash UDF defeats canonical equality) and re-ran
+    up to 5x -- at sf100 the repeated explode-join shuffle writes
+    ENOSPC'd a 62 GB disk budget.  Materializing cand once is the fix
+    and is ~free for every caller: the candidate relation is
+    LSH-bounded and skinny (two ids).  The pruned posting stream
+    (pa/pb) gets no cut: both branches hang off the same canonical
+    semi-join whose corpus-sized exchange IS reused, so materializing
+    the candidate-participating postings only added I/O (a cache of
+    it cost the native path 0.65 -> 0.76 at the sf100 probe)."""
+    cand = cand.localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
     cand_ids = (
         cand.select(F.col("id_a").alias(id_name))
         .union(cand.select(F.col("id_b").alias(id_name)))
@@ -618,11 +604,12 @@ def connected_components(
     # Static edge list stored hash-partitioned by the per-round join key
     # (ckpt_partitioned; PROBES_r11.json, OPTIMIZATION_r11.md).
     edges = ckpt_partitioned(edges, "dst")
+    # Round 0's labels stay lazy: they are one distinct over the stored
+    # edges, and round 1's cut materializes them with its fingerprint.
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
-        .localCheckpoint(eager=True)
     )
 
     def step(labels: DataFrame, _: int) -> DataFrame:

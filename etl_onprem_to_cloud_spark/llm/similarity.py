@@ -31,8 +31,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..pinned import pin
-
 from ..functions.numeric import portable_round
 from ..functions.vectors import cosine_similarity, dot_product
 from ..operators.layout import spread_input
@@ -913,13 +911,13 @@ def srp_near_dup_pairs(
     bits exactly (differential twins / oracle-generation paths).
     """
     if target_occupancy is not None:
-        # Count a PINNED projection of exactly the columns the pipeline
-        # reads: for a computed (non-parquet-backed) upstream plan a
-        # bare count() would execute the full lineage once extra per
-        # invocation; pinning first makes the governor's count the
-        # materialization the projection pass below then reuses.
-        embeddings = pin(
-            embeddings.select(id_col, vec_col), StorageLevel.MEMORY_AND_DISK
+        # Count a CHECKPOINTED projection of exactly the columns the
+        # pipeline reads: for a computed (non-parquet-backed) upstream
+        # plan a bare count() would execute the full lineage once extra
+        # per invocation.  The cut is lazy, so the governor's count is
+        # the one job that materializes it for the projection pass.
+        embeddings = embeddings.select(id_col, vec_col).localCheckpoint(
+            eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
         )
         n = embeddings.count()
         if n > (1 << bits_per_table) * target_occupancy:
@@ -1010,10 +1008,10 @@ def srp_near_dup_pairs(
         F.col("tb.table").alias("table"),
         F.col("tb.bucket").alias("bucket"),
     )
-    # Persist the (id, vec, table, bucket) relation: the candidate
+    # Checkpoint the (id, vec, table, bucket) relation: the candidate
     # self-join's two branches are not exchange-reused by the planner,
     # so without this each side re-runs the full projection pass.
-    keyed = pin(keyed, StorageLevel.MEMORY_AND_DISK)
+    keyed = keyed.localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
     a, b = keyed.alias("a"), keyed.alias("b")
     if projection == "pandas":
         # Candidate volume is occupancy-bounded but still the widest

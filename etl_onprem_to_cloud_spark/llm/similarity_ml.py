@@ -20,8 +20,6 @@ import math
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..pinned import pin
-
 from ..functions.text import shingles_from_tokens, tokens
 from ..operators.layout import spread_input
 
@@ -210,7 +208,7 @@ def ml_minhash_near_dup_pairs(
     vecs = (
         tf.transform(sh)
         .select(F.col(id_col), "features")
-        .transform(lambda d: pin(d, StorageLevel.MEMORY_AND_DISK))
+        .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
     lsh = MinHashLSH(
         inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=seed

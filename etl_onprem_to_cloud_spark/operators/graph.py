@@ -128,11 +128,26 @@ def duck_pagerank_sql(
     )
 
 
+def copurchase_pairs(lineitem: DataFrame) -> DataFrame:
+    """(x, y) part pairs with x < y, one row per order holding both:
+    the lineitem self-join on the order key under every co-purchase
+    graph.  The order-key scan is spread first
+    (``layout.spread_input``), so a compact scan does not emit every
+    pair from one task.  Callers dedupe or support-count the pairs."""
+    li = spread_input(
+        lineitem.select("l_orderkey", "l_partkey"), "l_orderkey"
+    )
+    a = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("x"))
+    b = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("y"))
+    return a.join(b, "o").filter(F.col("x") < F.col("y")).select("x", "y")
+
+
 def copurchase_edges(lineitem, min_support: int = 2, weight: bool = False):
     """Support-thresholded part co-purchase edge list (x < y), the
     shared substrate of the support-2 graph queries (LPA, Adamic-Adar,
-    Bellman-Ford, Hill alpha).  k-core and the BFS rings run on the
-    UNTHRESHOLDED distinct-pair variant and keep their own builds.
+    Bellman-Ford, Hill alpha).  k-core, the BFS rings and modularity
+    run on the UNTHRESHOLDED distinct pairs of the same
+    :func:`copurchase_pairs`.
 
     Checkpointed EAGERLY before returning: the edge list is always
     consumed through several different projections (und directions,
@@ -143,17 +158,9 @@ def copurchase_edges(lineitem, min_support: int = 2, weight: bool = False):
     carries ``w = 1000000 DIV support`` (integer, strong ties cheap --
     the Bellman-Ford cost) instead of being support-filtered only.
     """
-    from pyspark.sql import functions as F
-
-    li = spread_input(
-        lineitem.select("l_orderkey", "l_partkey"), "l_orderkey"
-    )
-    a = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pa"))
-    b = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pb"))
     base = (
-        a.join(b, "o")
-        .filter(F.col("pa") < F.col("pb"))
-        .groupBy(F.col("pa").alias("x"), F.col("pb").alias("y"))
+        copurchase_pairs(lineitem)
+        .groupBy("x", "y")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
         .filter(F.col("cnt") >= min_support)
     )

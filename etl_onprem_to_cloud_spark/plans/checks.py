@@ -53,12 +53,15 @@ def array_typed_exchanges(df: DataFrame) -> list[str]:
     rows and pushed through shuffles.  Exchange-count budgets cannot
     catch a reintroduction (the skinny shape legitimately has MORE
     exchanges); the typed walk can.  Descends AQE initial plans,
-    cached (pinned) relations' build plans, and subquery plans, so a
-    pinned array relation that shuffles -- or one hidden in a scalar/
-    IN subquery -- still trips it.  The type check is on the type's
-    simpleString, so arrays NESTED inside structs/maps (and map
-    columns, the other unbounded-width payload) are caught too: the
-    r7 regression wrapped in a struct is still the r7 regression.
+    cached relations' build plans, and subquery plans, so an array
+    exchange hidden in a scalar/IN subquery still trips it.  A
+    ``localCheckpoint`` cut is a scan of stored rows here: its build
+    plan is not part of ``df``'s plan, so a caller that wants the
+    checkpointed subtrees covered checks each cut's input DataFrame
+    too (tests/test_plans.py records them).  The type check is on the
+    type's simpleString, so arrays NESTED inside structs/maps (and map
+    columns, the other unbounded-width payload) are caught too: the r7
+    regression wrapped in a struct is still the r7 regression.
     """
     out: list[str] = []
     stack = [df._jdf.queryExecution().executedPlan()]
@@ -146,9 +149,10 @@ def _bounds(node) -> bool:
 #: table or an RDD-backed relation would otherwise be silently
 #: unguarded).
 #: ``LogicalRDD`` is what ``spark.createDataFrame`` lowers to when the
-#: local data takes the RDD path instead of ``LocalRelation`` -- in
-#: this engine RDD-backed relations only ever come from driver-side
-#: literal fixtures (query boxes, calendars), never from a corpus.
+#: local data takes the RDD path instead of ``LocalRelation``, and what
+#: a ``localCheckpoint`` cut's consumers scan.  A cut's rows may come
+#: from a corpus, which no walk from the consumer can see, so
+#: tests/test_plans.py walks each cut's input plan as well.
 _BENIGN_LEAVES = frozenset(
     {"LocalRelation", "OneRowRelation", "Range", "LogicalRDD"}
 )

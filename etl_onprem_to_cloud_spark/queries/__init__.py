@@ -18,14 +18,10 @@ available as functions, recall-tested in tests/test_similarity_ml.py.
 
 from __future__ import annotations
 
-import functools
-
 from dataclasses import dataclass
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-
-from ..pinned import release_pinned
 
 
 @dataclass
@@ -46,18 +42,7 @@ def query(
     description: str = "",
 ):
     def deco(fn):
-        # Every call first releases the calling thread's earlier pins
-        # (pinned.py): a caller has materialized the previous result
-        # before it builds the next one, so cached intermediates never
-        # accumulate and no harness needs a release hook.  Pins are
-        # per thread, so a call never touches another thread's cache;
-        # a repeat of the same query rebuilds from a cold cache.
-        @functools.wraps(fn)
-        def wrapped(spark, sf_dir):
-            release_pinned()
-            return fn(spark, sf_dir)
-
-        QUERIES[name] = QuerySpec(wrapped, oracle, tags, description)
+        QUERIES[name] = QuerySpec(fn, oracle, tags, description)
         return fn
 
     return deco
@@ -105,7 +90,7 @@ from . import finance  # noqa: E402,F401
 # registry's 50-entry prefix, and the stalest evidence is now the
 # oldest driver row -- 48 entries' most recent rows date to r01 and 2
 # to early r02, while shared infrastructure those queries run through
-# (the pin release above, session confs, numeric helpers) has
+# (the former pin registry, session confs, numeric helpers) has
 # changed for five rounds since.  The prefix below is exactly those
 # 50, ordered by (latest driver-row round, position within that
 # round's CORRECTNESS file); re-verifying them empties the r01

@@ -153,10 +153,10 @@ def _nb_scores(spark, sf_dir):
     # words of the (lang, w) pair table ARE the vocabulary): the three
     # independent aggregations each re-ran the train-side
     # tokenize+explode, so this drops two corpus explode passes.  A
-    # spread / pin(wc) variant measured WORSE at bench density (0.78 /
-    # 0.79 vs 0.58 s min-of-3) -- the scoring plan is too cheap here to
-    # amortize an extra exchange or a persist barrier -- so wc stays
-    # unpinned and the consumers rely on exchange reuse.
+    # spread / persisted-wc variant measured WORSE at bench density
+    # (0.78 / 0.79 vs 0.58 s min-of-3) -- the scoring plan is too cheap
+    # here to amortize an extra exchange or a materialization barrier
+    # -- so wc stays lazy and the consumers rely on exchange reuse.
     nc = wc.groupBy("lang").agg(F.sum("cnt").alias("n_tok"))
     v = wc.agg(F.count_distinct("w").alias("nv"))
     cls = train.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))

@@ -27,10 +27,10 @@ from ..operators import ranks as RK
 from ..operators.fixpoint import iterate
 from ..operators.layout import ckpt_partitioned, spread_input
 from ..operators.sampling import duck_hash_gate, hash_gate
-from ..pinned import pin
 from ..functions.text import tokens
 from ..operators.graph import (
     copurchase_edges,
+    copurchase_pairs,
     duck_pagerank_sql,
     pagerank_fixed_point,
 )
@@ -746,11 +746,11 @@ def q_sparse_tfidf_topk(spark, sf_dir):
     )
     dfc = tfc.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = tk.agg(F.count(F.lit(1)).alias("n_docs"))
-    # Persist the weighted postings: four downstream branches (norms,
-    # query side, corpus side of the dot join) would otherwise each
-    # recompute the tokenize+count+join subtree from the raw scan (24
-    # scans, zero ReusedExchange).  One materialization, read four
-    # times -- the same sanctioned pattern as the SRP bucket relation.
+    # Checkpoint the weighted postings: four downstream branches
+    # (norms, query side, corpus side of the dot join) would otherwise
+    # each recompute the tokenize+count+join subtree from the raw scan
+    # (24 scans, zero ReusedExchange).  One materialization, read four
+    # times -- the same pattern as the SRP bucket relation.
     w = (
         tfc.join(dfc, "term")
         .crossJoin(F.broadcast(n))
@@ -759,7 +759,7 @@ def q_sparse_tfidf_topk(spark, sf_dir):
             "term",
             F.expr(_TFIDF_W).alias("w"),
         )
-        .transform(pin)
+        .localCheckpoint()
     )
     norms = w.groupBy("doc_id").agg(F.sum(F.col("w") * F.col("w")).alias("nn"))
     qp = w.filter(F.col("doc_id") % 199 == 0).select(
@@ -1002,16 +1002,8 @@ def q_kcore_copurchase(spark, sf_dir):
     BFS DISK_ONLY rationale); later rounds hold the k-shrunk list and
     keep the memory default.  At 100 TB the peeling loop runs the same
     per-round plan until that fixpoint."""
-    li = spread_input(
-        cat(spark, sf_dir).lineitem.select("l_orderkey", "l_partkey"),
-        "l_orderkey",
-    )
-    a = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pa"))
-    b = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pb"))
     edges = (
-        a.join(b, "o")
-        .filter(F.col("pa") < F.col("pb"))
-        .select(F.col("pa").alias("x"), F.col("pb").alias("y"))
+        copurchase_pairs(cat(spark, sf_dir).lineitem)
         .distinct()
         .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
     )
@@ -2273,29 +2265,29 @@ def q_dedup_method_comparison(spark, sf_dir):
 
     docs = cat(spark, sf_dir).documents
     # Each pair set is consumed twice (count + truth-join) and the
-    # truth set four times -- persist the four bounded relations so no
-    # shingle/signature pipeline runs more than once (2.3x at sf0.1).
+    # truth set four times -- checkpoint the four bounded relations so
+    # no shingle/signature pipeline runs more than once (2.3x at sf0.1).
     truth = (
         ngram_jaccard_pairs_prefix(docs, threshold=0.5)
         .select("id_a", "id_b")
-        .transform(pin)
+        .localCheckpoint()
     )
     p_min = (
         minhash_lsh_candidate_pairs(docs, jaccard_threshold=0.5)
         .select("id_a", "id_b")
-        .transform(pin)
+        .localCheckpoint()
     )
     h = simhash_table(docs)
     ha = h.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("s1"))
     hb = h.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("s2"))
     p_sim = ha.join(
         hb, (F.col("s1") == F.col("s2")) & (F.col("id_a") < F.col("id_b"))
-    ).select("id_a", "id_b").transform(pin)
+    ).select("id_a", "id_b").localCheckpoint()
     con = containment_pairs_prefix(docs, threshold=0.8)
     p_con = con.select(
         F.least("contained_id", "container_id").alias("id_a"),
         F.greatest("contained_id", "container_id").alias("id_b"),
-    ).distinct().transform(pin)
+    ).distinct().localCheckpoint()
     n_truth = truth.agg(F.count(F.lit(1)).alias("n_truth"))
 
     def metrics(name, p):
@@ -3055,27 +3047,13 @@ FROM m, intra, dsum
     ),
 )
 def q_modularity_brand_copurchase(spark, sf_dir):
-    """Edge build = the k-core query's self-join (exchange-reused
-    across the degree and intra-edge branches); the brand lookup is a
-    CORPUS-SCALED part projection, so its joins carry no broadcast
-    hint (estimator/AQE broadcasts at test SFs, falls back to shuffle
-    at 100x); the rest is three scalar aggregates."""
+    """Edge build = the distinct co-purchase pairs k-core also uses
+    (exchange-reused across the degree and intra-edge branches); the
+    brand lookup is a CORPUS-SCALED part projection, so its joins carry
+    no broadcast hint (estimator/AQE broadcasts at test SFs, falls back
+    to shuffle at 100x); the rest is three scalar aggregates."""
     c = cat(spark, sf_dir)
-    # r11: the one co-purchase edge build that still ran its pair
-    # emission in the single scan task (k-core/BFS/copurchase_edges
-    # gained the spread in r10; this inline build was missed).  Same
-    # no-op-at-scale auto-detect (layout.spread_input).
-    li = spread_input(
-        c.lineitem.select("l_orderkey", "l_partkey"), "l_orderkey"
-    )
-    a = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pa"))
-    bb = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pb"))
-    edges = (
-        a.join(bb, "o")
-        .filter(F.col("pa") < F.col("pb"))
-        .select(F.col("pa").alias("x"), F.col("pb").alias("y"))
-        .distinct()
-    )
+    edges = copurchase_pairs(c.lineitem).distinct()
     deg = (
         edges.select(F.col("x").alias("node"))
         .unionAll(edges.select(F.col("y").alias("node")))
@@ -3597,18 +3575,7 @@ def q_bfs_hops_from_hubs(spark, sf_dir):
     twice next round (frontier + carry) and, uncut, re-runs its rollup
     (4.8 s vs 5.4 s every other round at sf0.1, OPTIMIZATION_r10.md).
     No fingerprint: its cut costs a job more than an eager one."""
-    li = spread_input(
-        cat(spark, sf_dir).lineitem.select("l_orderkey", "l_partkey"),
-        "l_orderkey",
-    )
-    a = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pa"))
-    b = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pb"))
-    edges = (
-        a.join(b, "o")
-        .filter(F.col("pa") < F.col("pb"))
-        .select(F.col("pa").alias("x"), F.col("pb").alias("y"))
-        .distinct()
-    )
+    edges = copurchase_pairs(cat(spark, sf_dir).lineitem).distinct()
     # Checkpoint EDGES (the dedup output), then derive und as two
     # projections of the checkpointed relation -- never checkpoint
     # the union itself.  Two r10 sf100 catches live here:

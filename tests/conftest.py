@@ -23,12 +23,3 @@ def spark():
 def sf_dir():
     return SF_DIR
 
-
-@pytest.fixture(autouse=True)
-def _release_pinned_cache():
-    """Drain the pin() registry after every test so persisted query
-    intermediates never accumulate across the session-scoped Spark."""
-    yield
-    from etl_onprem_to_cloud_spark.pinned import release_pinned
-
-    release_pinned()

@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_onprem_to_cloud_spark.operators.fixpoint import iterate
-from etl_onprem_to_cloud_spark.pinned import release_pinned
 from etl_onprem_to_cloud_spark.queries import QUERIES
 
 
@@ -85,14 +84,19 @@ def test_fingerprinted_cuts_last_round_too(spark):
 
 @pytest.mark.parametrize(
     "name, max_jobs",
-    [("q_bellman_ford_cheapest", 21), ("q_dedup_clusters_star", 35)],
+    [
+        ("q_bellman_ford_cheapest", 21),
+        ("q_dedup_clusters_star", 35),
+        ("q_dedup_clusters", 25),
+        ("q_entity_resolution_parts", 15),
+    ],
 )
 def test_fingerprinted_query_builds_bounded_jobs(name, max_jobs, spark, sf_dir):
     """The fingerprint rides on each round's one cut: Bellman-Ford takes
-    its improved flag from the round's min aggregate, and star CC spends
-    no job fingerprinting its input."""
+    its improved flag from the round's min aggregate, star CC spends no
+    job fingerprinting its input, and min-label CC leaves its round-0
+    labels to round 1's cut."""
     _, jobs = _jobs(
         spark, f"test_fixpoint_{name}", lambda: QUERIES[name].fn(spark, sf_dir)
     )
-    release_pinned()
     assert jobs <= max_jobs, f"{name}: {jobs} build jobs > {max_jobs}"

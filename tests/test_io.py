@@ -225,21 +225,6 @@ def test_binary_file_ingest_to_multimodal_decode(spark, tmp_path):
     assert rows == {(2, 1), (1, 1)}
 
 
-def test_pin_release_unpersists(spark, sf_dir):
-    """pin() caches across the query's actions; release_pinned() must
-    actually drop the cached relation (the bench/rehearsal harnesses
-    rely on this to keep the long-lived session's memory flat)."""
-    from etl_onprem_to_cloud_spark.pinned import pin, release_pinned
-    from etl_onprem_to_cloud_spark.sources.io import read_parquet
-
-    df = pin(read_parquet(spark, f"{sf_dir}/region.parquet"))
-    assert df.storageLevel.useMemory
-    df.count()  # materialize the cache
-    assert release_pinned() >= 1
-    assert not df.storageLevel.useMemory
-    assert release_pinned() == 0  # registry drained
-
-
 def test_declared_fixture_schemas_match_the_files(spark, sf_dir):
     """FIXTURE_TABLES is the schema load_table reads with, so it must be
     what Spark would infer (names, order, types, nullability) -- and

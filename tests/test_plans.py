@@ -15,6 +15,64 @@ from etl_onprem_to_cloud_spark.plans import (
 )
 from etl_onprem_to_cloud_spark.queries import QUERIES
 
+def _plans(build, monkeypatch):
+    """``[(df, shuffles)]``: the DataFrame ``build()`` returns and then
+    the input of every ``localCheckpoint`` the build made, each with its
+    :func:`shuffle_count`.  A cut's consumers plan only a scan of its
+    stored rows, so a guard that reads the final plan alone misses
+    every subtree behind a cut.  An input is counted before its cut
+    runs it: an executed adaptive plan prints its final and its initial
+    plan, which would count each exchange twice."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    cut_inputs = []
+    real = DataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        cut_inputs.append((self, shuffle_count(self)))
+        return real(self, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrame, "localCheckpoint", recording)
+        df = build()
+    return [(df, shuffle_count(df))] + cut_inputs
+
+
+def _query_plans(name, spark, sf_dir, monkeypatch):
+    return _plans(lambda: QUERIES[name].fn(spark, sf_dir), monkeypatch)
+
+
+#: Loop queries whose shuffle bound was set on the final plan, after
+#: their lineage cuts: summed over the cut inputs they would need new
+#: numbers (sf0.001, final -> summed: bellman_ford 0 -> 12, lpa 7 -> 17,
+#: entity_resolution 5 -> 16, hierarchy 5 -> 13, adamic_adar 5 -> 9,
+#: degree_powerlaw 1 -> 4, markov_removal 1 -> 3, conversion_latency
+#: 4 -> 6).  Every other bound counts the final plan plus every cut
+#: input; the Python and cartesian checks read every plan for all.
+FINAL_PLAN_BOUNDS = frozenset({
+    "q_adamic_adar_linkpred", "q_bellman_ford_cheapest",
+    "q_conversion_latency", "q_degree_powerlaw_alpha",
+    "q_entity_resolution_parts", "q_hierarchy_revenue_rollup",
+    "q_lpa_communities", "q_markov_removal_attribution",
+})
+
+
+def _check_plan_shape(name, max_shuffles, spark, sf_dir, monkeypatch):
+    """The shared plan-shape guard: at most ``max_shuffles`` exchanges,
+    and no Python UDF and no cartesian product in the final plan or in
+    any cut input.  Returns the plans for a caller's extra checks."""
+    plans = _query_plans(name, spark, sf_dir, monkeypatch)
+    if name in FINAL_PLAN_BOUNDS:
+        shuffles = plans[0][1]
+    else:
+        shuffles = sum(n for _, n in plans)
+    assert shuffles <= max_shuffles
+    for d, _ in plans:
+        assert not has_python_udf(d)
+        assert "CartesianProduct" not in explain_str(d, "simple")
+    return plans
+
+
 PYTHON_FREE = [
     n
     for n, s in QUERIES.items()
@@ -45,9 +103,9 @@ def test_scan_prunes_columns(spark, sf_dir):
 
 @pytest.mark.parametrize("name", ["q01_pricing_summary", "q_text_stats",
                                   "q_dedup_minhash_lsh", "q_dedup_containment"])
-def test_hot_paths_have_no_python_udf(name, spark, sf_dir):
-    df = QUERIES[name].fn(spark, sf_dir)
-    assert not has_python_udf(df), f"{name} plan contains a Python UDF"
+def test_hot_paths_have_no_python_udf(name, spark, sf_dir, monkeypatch):
+    for d, _ in _query_plans(name, spark, sf_dir, monkeypatch):
+        assert not has_python_udf(d), f"{name} plan contains a Python UDF"
 
 
 @pytest.mark.parametrize("name", ["q_ann_brute_force_topk", "q_knn_label_vote"])
@@ -110,18 +168,14 @@ def test_q19_filter_pushed(spark, sf_dir):
     assert has_broadcast_join(df)
 
 
-def test_quality_gate_is_shuffle_free(spark, sf_dir):
+def test_quality_gate_is_shuffle_free(spark, sf_dir, monkeypatch):
     """The composite gate must stay one codegen projection: no exchange,
     no Python eval."""
-    df = QUERIES["q_text_quality_gate"].fn(spark, sf_dir)
-    assert shuffle_count(df) == 0
-    assert not has_python_udf(df)
+    _check_plan_shape("q_text_quality_gate", 0, spark, sf_dir, monkeypatch)
 
 
-def test_split_assignment_is_shuffle_free(spark, sf_dir):
-    df = QUERIES["q_split_train_val_test"].fn(spark, sf_dir)
-    assert shuffle_count(df) == 0
-    assert not has_python_udf(df)
+def test_split_assignment_is_shuffle_free(spark, sf_dir, monkeypatch):
+    _check_plan_shape("q_split_train_val_test", 0, spark, sf_dir, monkeypatch)
 
 
 def test_pack_contexts_single_window_shuffle(spark, sf_dir):
@@ -132,35 +186,36 @@ def test_pack_contexts_single_window_shuffle(spark, sf_dir):
     assert shuffle_count(df) == 1, "one shuffle on the partition column"
 
 
-def test_srp_vectorized_projection_and_bounded_shuffles(spark, sf_dir):
-    """SRP-LSH's projection is the sanctioned vectorized escape: exactly
-    one Arrow-batched pandas UDF (the numpy matmul), never row-at-a-time
-    Python; shuffles are the candidate join + verify joins, not a cross
-    product."""
-    from etl_onprem_to_cloud_spark.plans.checks import explain_str
-
-    df = QUERIES["q_srp_near_dup_pairs"].fn(spark, sf_dir)
-    plan = explain_str(df, "simple")
-    assert "BatchEvalPython" not in plan, "row-at-a-time Python UDF on hot path"
-    # Python stages must be the sanctioned Arrow-batched kind.  (No
-    # count assertion: when a prior call's persisted bucket relation is
-    # still cached, the plan inlines the cached subtree and node counts
-    # shift -- counting would make this test order-dependent.)
-    assert "ArrowEvalPython" in plan or "InMemoryTableScan" in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+def test_srp_vectorized_projection_and_bounded_shuffles(spark, sf_dir, monkeypatch):
+    """SRP-LSH's projection is the sanctioned vectorized escape: Arrow-
+    batched pandas UDFs (the numpy matmul), never row-at-a-time Python;
+    shuffles are the candidate join + verify joins, not a cross
+    product.  Checked over the final plan and the checkpointed bucket
+    relation's input, where the projection runs."""
+    plans = [
+        explain_str(d, "simple")
+        for d, _ in _query_plans("q_srp_near_dup_pairs", spark, sf_dir, monkeypatch)
+    ]
+    assert not any("BatchEvalPython" in p for p in plans), "row-at-a-time UDF"
+    assert any("ArrowEvalPython" in p for p in plans)
+    assert not any("CartesianProduct" in p for p in plans)
+    assert not any("BroadcastNestedLoopJoin" in p for p in plans)
 
 
-def test_srp_expr_twin_stays_jvm_side(spark, sf_dir):
+def test_srp_expr_twin_stays_jvm_side(spark, sf_dir, monkeypatch):
     """The differential twin (projection='expr') must remain fully
     codegen'd -- it is the no-Python reference the pandas path is
-    checked against."""
+    checked against.  The projection runs in the bucket cut's input."""
     from etl_onprem_to_cloud_spark.llm.similarity import srp_near_dup_pairs
     from etl_onprem_to_cloud_spark.sources.io import read_parquet
 
     emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
-    df = srp_near_dup_pairs(emb, dim=64, projection="expr")
-    assert not has_python_udf(df)
+    plans = _plans(
+        lambda: srp_near_dup_pairs(emb, dim=64, projection="expr"), monkeypatch
+    )
+    assert len(plans) > 1
+    for d, _ in plans:
+        assert not has_python_udf(d)
 
 
 @pytest.mark.parametrize("name,max_shuffles", [
@@ -171,15 +226,11 @@ def test_srp_expr_twin_stays_jvm_side(spark, sf_dir):
     ("q_skew_salted_agg", 2),
     ("q_multimodal_audio_chunks", 0),
 ])
-def test_new_queries_bounded_shuffles_no_udf(name, max_shuffles, spark, sf_dir):
-    from etl_onprem_to_cloud_spark.plans.checks import explain_str
-
-    df = QUERIES[name].fn(spark, sf_dir)
-    assert shuffle_count(df) <= max_shuffles
-    assert not has_python_udf(df)
-    plan = explain_str(df, "simple")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+def test_new_queries_bounded_shuffles_no_udf(
+    name, max_shuffles, spark, sf_dir, monkeypatch
+):
+    for d, _ in _check_plan_shape(name, max_shuffles, spark, sf_dir, monkeypatch):
+        assert "BroadcastNestedLoopJoin" not in explain_str(d, "simple")
 
 
 @pytest.mark.parametrize("name,max_shuffles", [
@@ -192,10 +243,10 @@ def test_new_queries_bounded_shuffles_no_udf(name, max_shuffles, spark, sf_dir):
     # q_multimodal_ppm_decode appears via the pandas-udf tag exclusion
     # below -- its decode IS the sanctioned mapInPandas escape.
 ])
-def test_r3_queries_bounded_shuffles_no_udf(name, max_shuffles, spark, sf_dir):
-    df = QUERIES[name].fn(spark, sf_dir)
-    assert shuffle_count(df) <= max_shuffles
-    assert not has_python_udf(df)
+def test_r3_queries_bounded_shuffles_no_udf(
+    name, max_shuffles, spark, sf_dir, monkeypatch
+):
+    _check_plan_shape(name, max_shuffles, spark, sf_dir, monkeypatch)
 
 
 @pytest.mark.parametrize("name,max_shuffles,scalar_bcast", [
@@ -225,19 +276,14 @@ def test_r3_queries_bounded_shuffles_no_udf(name, max_shuffles, spark, sf_dir):
     ("q_zipf_slope", 4, False),
 ])
 def test_curation_queries_bounded_shuffles_no_udf(
-    name, max_shuffles, scalar_bcast, spark, sf_dir
+    name, max_shuffles, scalar_bcast, spark, sf_dir, monkeypatch
 ):
-    from etl_onprem_to_cloud_spark.plans.checks import explain_str
-
-    df = QUERIES[name].fn(spark, sf_dir)
-    assert shuffle_count(df) <= max_shuffles
-    assert not has_python_udf(df)
-    plan = explain_str(df, "simple")
-    assert "CartesianProduct" not in plan
+    plans = _check_plan_shape(name, max_shuffles, spark, sf_dir, monkeypatch)
     if not scalar_bcast:
         # For the scalar-broadcast queries a BroadcastNestedLoopJoin IS
         # the expected shape: the build side is one aggregated row.
-        assert "BroadcastNestedLoopJoin" not in plan
+        for d, _ in plans:
+            assert "BroadcastNestedLoopJoin" not in explain_str(d, "simple")
 
 
 def test_bm25_uses_take_ordered(spark, sf_dir):
@@ -276,12 +322,10 @@ def test_bloom_semi_join_prunes_before_join(spark, sf_dir):
     ("q_winsorized_price_stats", 2),
     ("q_resample_match_uniform_length", 5),
 ])
-def test_r04_queries_bounded_shuffles_no_udf(name, max_shuffles, spark, sf_dir):
-    df = QUERIES[name].fn(spark, sf_dir)
-    assert shuffle_count(df) <= max_shuffles
-    assert not has_python_udf(df)
-    plan = explain_str(df, "simple")
-    assert "CartesianProduct" not in plan
+def test_r04_queries_bounded_shuffles_no_udf(
+    name, max_shuffles, spark, sf_dir, monkeypatch
+):
+    _check_plan_shape(name, max_shuffles, spark, sf_dir, monkeypatch)
 
 
 @pytest.mark.parametrize("name,max_shuffles", [
@@ -317,9 +361,9 @@ def test_r04_queries_bounded_shuffles_no_udf(name, max_shuffles, spark, sf_dir):
     # them pair- or pruned-posting-sized, none carrying arrays.  Node
     # count went up; bytes-through-exchange collapsed (see the README
     # sf100 table).  Budget = the measured count of the new shape
-    # (incl. the pinned cand relation's build plan -- exc is
-    # INTENTIONALLY unpinned, the posting-stream pin measured as a
-    # regression at sf100, native 0.65 -> 0.76; pins cut EXECUTIONS,
+    # (incl. the checkpointed cand relation's input plan -- exc is
+    # INTENTIONALLY not cut, caching the posting stream measured as a
+    # regression at sf100, native 0.65 -> 0.76; cuts save EXECUTIONS,
     # not plan nodes).  The count alone has ~4x headroom over the old
     # shape, so the regression actually feared -- arrays reattached to
     # pair rows -- is asserted separately by
@@ -334,12 +378,10 @@ def test_r04_queries_bounded_shuffles_no_udf(name, max_shuffles, spark, sf_dir):
     # q_gdpr_purge_audit: broadcast anti-join + two event_type rollups.
     ("q_gdpr_purge_audit", 4),
 ])
-def test_r05_span_queries_bounded_shuffles_no_udf(name, max_shuffles, spark, sf_dir):
-    df = QUERIES[name].fn(spark, sf_dir)
-    assert shuffle_count(df) <= max_shuffles
-    assert not has_python_udf(df)
-    plan = explain_str(df, "simple")
-    assert "CartesianProduct" not in plan
+def test_r05_span_queries_bounded_shuffles_no_udf(
+    name, max_shuffles, spark, sf_dir, monkeypatch
+):
+    _check_plan_shape(name, max_shuffles, spark, sf_dir, monkeypatch)
 
 
 @pytest.mark.parametrize("name,allowed", [
@@ -362,12 +404,20 @@ def test_r05_span_queries_bounded_shuffles_no_udf(name, max_shuffles, spark, sf_
     ("q_dedup_containment", frozenset()),
     ("q_dedup_ngram_jaccard", frozenset()),
     ("q_dedup_exact_keep", frozenset()),
-    ("q_semantic_dedup_clusters", frozenset()),
+    # Its SRP candidate generation, seen through the cut inputs, moves
+    # the vectors exactly as q_srp_near_dup_pairs does (the corpus
+    # spread, the bucket join's build side); the connected-components
+    # rounds after it must stay scalar-only.
+    ("q_semantic_dedup_clusters", frozenset({
+        "Exchange:embedding", "BroadcastExchange:__v",
+    })),
 ])
-def test_count_carry_exchanges_are_array_free(name, allowed, spark, sf_dir):
+def test_count_carry_exchanges_are_array_free(
+    name, allowed, spark, sf_dir, monkeypatch
+):
     """The shape invariant behind the count-carry verify (VERDICT r7
-    item 4): NO exchange anywhere in these plans -- including pinned
-    relations' build plans, subqueries, and struct-nested payloads --
+    item 4): NO exchange anywhere in these plans -- including the
+    inputs of checkpointed cuts, subqueries, and struct-nested payloads --
     may carry an array-typed column beyond the explicit per-query
     allowlist.  The exchange-count budgets above have headroom by
     design (skinny exchanges are cheap); this is the test that fails
@@ -377,8 +427,8 @@ def test_count_carry_exchanges_are_array_free(name, allowed, spark, sf_dir):
     exchange arithmetic."""
     from etl_onprem_to_cloud_spark.plans import array_typed_exchanges
 
-    df = QUERIES[name].fn(spark, sf_dir)
-    assert set(array_typed_exchanges(df)) <= allowed
+    plans = _query_plans(name, spark, sf_dir, monkeypatch)
+    assert {a for d, _ in plans for a in array_typed_exchanges(d)} <= allowed
 
 
 def test_array_typed_exchanges_positive_controls(spark):
@@ -453,25 +503,17 @@ def test_broadcast_join_moves_no_fact_shuffle(spark, sf_dir):
     # equi-depth: per-priority ntile window + bucket agg.
     ("q_equidepth_price_buckets", 2),
 ])
-def test_mining_queries_bounded_shuffles_no_udf(name, max_shuffles, spark, sf_dir):
-    from etl_onprem_to_cloud_spark.plans.checks import explain_str
-
-    df = QUERIES[name].fn(spark, sf_dir)
-    assert shuffle_count(df) <= max_shuffles
-    assert not has_python_udf(df)
-    plan = explain_str(df, "simple")
-    assert "CartesianProduct" not in plan
+def test_mining_queries_bounded_shuffles_no_udf(
+    name, max_shuffles, spark, sf_dir, monkeypatch
+):
+    _check_plan_shape(name, max_shuffles, spark, sf_dir, monkeypatch)
 
 
-def test_textrank_iterations_bounded_and_jvm_side(spark, sf_dir):
-    """8 supersteps of rank-join-agg: the final plan carries the
-    post-checkpoint rounds only (lineage is cut every 4), all JVM-side,
-    no cartesian anywhere in the iteration."""
-    df = QUERIES["q_textrank_tokens"].fn(spark, sf_dir)
-    assert not has_python_udf(df)
-    assert shuffle_count(df) <= 24
-    plan = explain_str(df, "simple")
-    assert "CartesianProduct" not in plan
+def test_textrank_iterations_bounded_and_jvm_side(spark, sf_dir, monkeypatch):
+    """8 supersteps of rank-join-agg, lineage cut every 4: the final
+    plan and the cut rounds' inputs together stay within the bound,
+    all JVM-side, no cartesian anywhere in the iteration."""
+    _check_plan_shape("q_textrank_tokens", 24, spark, sf_dir, monkeypatch)
 
 
 def test_quality_referential_check_broadcasts(spark, sf_dir):
@@ -489,39 +531,29 @@ def test_quality_referential_check_broadcasts(spark, sf_dir):
     # variant documented for skewed graphs).
     ("q_triangle_clustering", 15),
 ])
-def test_mining_batch3_bounded_shuffles(name, max_shuffles, spark, sf_dir):
-    from etl_onprem_to_cloud_spark.plans.checks import explain_str
-
-    df = QUERIES[name].fn(spark, sf_dir)
-    assert shuffle_count(df) <= max_shuffles
-    assert not has_python_udf(df)
-    plan = explain_str(df, "simple")
-    assert "CartesianProduct" not in plan
+def test_mining_batch3_bounded_shuffles(name, max_shuffles, spark, sf_dir, monkeypatch):
+    _check_plan_shape(name, max_shuffles, spark, sf_dir, monkeypatch)
 
 
-def test_ttest_is_single_pass_shuffle_free(spark, sf_dir):
+def test_ttest_is_single_pass_shuffle_free(spark, sf_dir, monkeypatch):
     """Sufficient statistics for both samples come from ONE conditional
     aggregation: no shuffle at all before the 1-row result."""
-    df = QUERIES["q_ttest_purchase_view"].fn(spark, sf_dir)
-    assert shuffle_count(df) == 0
-    assert not has_python_udf(df)
+    _check_plan_shape("q_ttest_purchase_view", 0, spark, sf_dir, monkeypatch)
 
 
-def test_sparse_tfidf_reuses_persisted_postings(spark, sf_dir):
-    """The weighted postings feed four branches; without the persist
-    each branch recomputes tokenize+count+join from the raw scan.  (No
-    shuffle-count assertion: exchanges printed inside InMemoryRelation
-    descriptions are not re-executed, so counts are order-dependent --
-    same caveat as the SRP bucket relation test.)"""
-    from etl_onprem_to_cloud_spark.plans.checks import explain_str
-
-    df = QUERIES["q_sparse_tfidf_topk"].fn(spark, sf_dir)
-    assert not has_python_udf(df)
-    plan = explain_str(df, "simple")
-    assert "CartesianProduct" not in plan
-    df.count()  # materialize the persisted postings
-    plan_warm = explain_str(QUERIES["q_sparse_tfidf_topk"].fn(spark, sf_dir), "simple")
-    assert "InMemoryTableScan" in plan_warm
+def test_sparse_tfidf_reuses_checkpointed_postings(spark, sf_dir, monkeypatch):
+    """The weighted postings feed four branches; without the cut each
+    branch recomputes tokenize+count+join from the raw scan.  The
+    postings are built once, in the one cut, and the final plan reads
+    only their stored rows."""
+    (df, _), *cuts = _query_plans("q_sparse_tfidf_topk", spark, sf_dir, monkeypatch)
+    assert len(cuts) == 1
+    final, postings = explain_str(df, "simple"), explain_str(cuts[0][0], "simple")
+    assert "FileScan" in postings
+    assert "FileScan" not in final and "Scan ExistingRDD" in final
+    for d in (df, cuts[0][0]):
+        assert not has_python_udf(d)
+        assert "CartesianProduct" not in explain_str(d, "simple")
 
 
 @pytest.mark.parametrize("name,max_shuffles", [
@@ -538,14 +570,8 @@ def test_sparse_tfidf_reuses_persisted_postings(spark, sf_dir):
     # rollup and final count add keyed aggs.
     ("q_top_session_paths", 4),
 ])
-def test_mining_batch4_bounded_shuffles(name, max_shuffles, spark, sf_dir):
-    from etl_onprem_to_cloud_spark.plans.checks import explain_str
-
-    df = QUERIES[name].fn(spark, sf_dir)
-    assert shuffle_count(df) <= max_shuffles
-    assert not has_python_udf(df)
-    plan = explain_str(df, "simple")
-    assert "CartesianProduct" not in plan
+def test_mining_batch4_bounded_shuffles(name, max_shuffles, spark, sf_dir, monkeypatch):
+    _check_plan_shape(name, max_shuffles, spark, sf_dir, monkeypatch)
 
 
 @pytest.mark.parametrize("name,max_shuffles", [
@@ -556,14 +582,8 @@ def test_mining_batch4_bounded_shuffles(name, max_shuffles, spark, sf_dir):
     # normalizer broadcast back.
     ("q_temperature_mixture", 4),
 ])
-def test_mining_batch5_bounded_shuffles(name, max_shuffles, spark, sf_dir):
-    from etl_onprem_to_cloud_spark.plans.checks import explain_str
-
-    df = QUERIES[name].fn(spark, sf_dir)
-    assert shuffle_count(df) <= max_shuffles
-    assert not has_python_udf(df)
-    plan = explain_str(df, "simple")
-    assert "CartesianProduct" not in plan
+def test_mining_batch5_bounded_shuffles(name, max_shuffles, spark, sf_dir, monkeypatch):
+    _check_plan_shape(name, max_shuffles, spark, sf_dir, monkeypatch)
 
 
 def test_global_equidepth_has_no_sort_before_agg(spark, sf_dir):
@@ -583,14 +603,10 @@ def test_global_equidepth_has_no_sort_before_agg(spark, sf_dir):
     # top-k + OTHERS: broadcast dim joins, one rollup, 25-row rank.
     ("q_topk_nations_with_others", 5),
 ])
-def test_reporting_queries_bounded_shuffles(name, max_shuffles, spark, sf_dir):
-    from etl_onprem_to_cloud_spark.plans.checks import explain_str
-
-    df = QUERIES[name].fn(spark, sf_dir)
-    assert shuffle_count(df) <= max_shuffles
-    assert not has_python_udf(df)
-    plan = explain_str(df, "simple")
-    assert "CartesianProduct" not in plan
+def test_reporting_queries_bounded_shuffles(
+    name, max_shuffles, spark, sf_dir, monkeypatch
+):
+    _check_plan_shape(name, max_shuffles, spark, sf_dir, monkeypatch)
 
 
 def test_topk_others_broadcasts_dims(spark, sf_dir):
@@ -598,15 +614,15 @@ def test_topk_others_broadcasts_dims(spark, sf_dir):
     assert has_broadcast_join(df)
 
 
-def test_lsh_blocking_quality_no_cartesian_on_spark_side(spark, sf_dir):
+def test_lsh_blocking_quality_no_cartesian_on_spark_side(
+    spark, sf_dir, monkeypatch
+):
     """The Spark side must never run the naive all-pairs join -- truth
     comes from the prefix-filtered exact join; only the ORACLE text
     contains the quadratic form."""
-    from etl_onprem_to_cloud_spark.plans.checks import explain_str
-
-    df = QUERIES["q_lsh_blocking_quality"].fn(spark, sf_dir)
-    assert not has_python_udf(df)
-    assert "CartesianProduct" not in explain_str(df, "simple")
+    for d, _ in _query_plans("q_lsh_blocking_quality", spark, sf_dir, monkeypatch):
+        assert not has_python_udf(d)
+        assert "CartesianProduct" not in explain_str(d, "simple")
 
 
 @pytest.mark.parametrize("name,max_shuffles", [
@@ -615,13 +631,10 @@ def test_lsh_blocking_quality_no_cartesian_on_spark_side(spark, sf_dir):
     # OHLC: two row_number windows + the aggregate on (type, hour).
     ("q_ohlc_hourly_values", 3),
 ])
-def test_timeseries_bars_bounded_shuffles(name, max_shuffles, spark, sf_dir):
-    from etl_onprem_to_cloud_spark.plans.checks import explain_str
-
-    df = QUERIES[name].fn(spark, sf_dir)
-    assert shuffle_count(df) <= max_shuffles
-    assert not has_python_udf(df)
-    assert "CartesianProduct" not in explain_str(df, "simple")
+def test_timeseries_bars_bounded_shuffles(
+    name, max_shuffles, spark, sf_dir, monkeypatch
+):
+    _check_plan_shape(name, max_shuffles, spark, sf_dir, monkeypatch)
 
 
 @pytest.mark.parametrize("name,max_shuffles", [
@@ -685,26 +698,20 @@ def test_timeseries_bars_bounded_shuffles(name, max_shuffles, spark, sf_dir):
     # NDCG eval: inverted-index join + rank windows + two reductions.
     ("q_retrieval_ndcg_eval", 12),
 ])
-def test_r04_new_queries_plan_shape(name, max_shuffles, spark, sf_dir):
-    from etl_onprem_to_cloud_spark.plans.checks import explain_str
-
-    df = QUERIES[name].fn(spark, sf_dir)
-    assert shuffle_count(df) <= max_shuffles
-    assert not has_python_udf(df)
-    assert "CartesianProduct" not in explain_str(df, "simple")
+def test_r04_new_queries_plan_shape(name, max_shuffles, spark, sf_dir, monkeypatch):
+    _check_plan_shape(name, max_shuffles, spark, sf_dir, monkeypatch)
 
 
-def test_contrastive_pairs_plan_shape(spark, sf_dir):
+def test_contrastive_pairs_plan_shape(spark, sf_dir, monkeypatch):
     """SRP banded candidates + verify joins (positive side; its numpy
     projection is the sanctioned Arrow-batched escape, so only
     row-at-a-time Python is banned) + one bucket window (negatives)."""
-    from etl_onprem_to_cloud_spark.plans.checks import explain_str
-
-    df = QUERIES["q_contrastive_pairs"].fn(spark, sf_dir)
-    assert shuffle_count(df) <= 11
-    plan = explain_str(df, "simple")
-    assert "BatchEvalPython" not in plan
-    assert "CartesianProduct" not in plan
+    plans = _query_plans("q_contrastive_pairs", spark, sf_dir, monkeypatch)
+    assert sum(n for _, n in plans) <= 11
+    for d, _ in plans:
+        plan = explain_str(d, "simple")
+        assert "BatchEvalPython" not in plan
+        assert "CartesianProduct" not in plan
 
 
 @pytest.mark.parametrize("name,max_shuffles", [
@@ -723,13 +730,8 @@ def test_contrastive_pairs_plan_shape(spark, sf_dir):
     # kappa: map-only classify + two marginal rollups + scalar joins.
     ("q_classifier_kappa", 6),
 ])
-def test_r04_batch3_plan_shape(name, max_shuffles, spark, sf_dir):
-    from etl_onprem_to_cloud_spark.plans.checks import explain_str
-
-    df = QUERIES[name].fn(spark, sf_dir)
-    assert shuffle_count(df) <= max_shuffles
-    assert not has_python_udf(df)
-    assert "CartesianProduct" not in explain_str(df, "simple")
+def test_r04_batch3_plan_shape(name, max_shuffles, spark, sf_dir, monkeypatch):
+    _check_plan_shape(name, max_shuffles, spark, sf_dir, monkeypatch)
 
 
 def test_wav_decode_is_arrow_batched(spark, sf_dir):
@@ -790,13 +792,8 @@ def test_png_decode_is_arrow_batched_map_only(spark, sf_dir):
     # describes.  Executed exchanges are unchanged except the spread.
     ("q_modularity_brand_copurchase", 15),
 ])
-def test_r04_batch4_plan_shape(name, max_shuffles, spark, sf_dir):
-    from etl_onprem_to_cloud_spark.plans.checks import explain_str
-
-    df = QUERIES[name].fn(spark, sf_dir)
-    assert shuffle_count(df) <= max_shuffles
-    assert not has_python_udf(df)
-    assert "CartesianProduct" not in explain_str(df, "simple")
+def test_r04_batch4_plan_shape(name, max_shuffles, spark, sf_dir, monkeypatch):
+    _check_plan_shape(name, max_shuffles, spark, sf_dir, monkeypatch)
 
 
 @pytest.mark.parametrize("name,max_shuffles", [
@@ -856,11 +853,8 @@ def test_r04_batch4_plan_shape(name, max_shuffles, spark, sf_dir):
     # Neyman: one 20-group stats rollup + strata-sized windows.
     ("q_neyman_allocation", 5),
 ])
-def test_r04_batch5_plan_shape(name, max_shuffles, spark, sf_dir):
-    df = QUERIES[name].fn(spark, sf_dir)
-    assert shuffle_count(df) <= max_shuffles
-    assert not has_python_udf(df)
-    assert "CartesianProduct" not in explain_str(df, "simple")
+def test_r04_batch5_plan_shape(name, max_shuffles, spark, sf_dir, monkeypatch):
+    _check_plan_shape(name, max_shuffles, spark, sf_dir, monkeypatch)
 
 
 @pytest.mark.parametrize("name,max_shuffles", [
@@ -956,11 +950,8 @@ def test_r04_batch5_plan_shape(name, max_shuffles, spark, sf_dir):
     # calendar-bounded series + the 7-group reduce.
     ("q_forecast_backtest_horizons", 3),
 ])
-def test_r04_batch89_plan_shape(name, max_shuffles, spark, sf_dir):
-    df = QUERIES[name].fn(spark, sf_dir)
-    assert shuffle_count(df) <= max_shuffles
-    assert not has_python_udf(df)
-    assert "CartesianProduct" not in explain_str(df, "simple")
+def test_r04_batch89_plan_shape(name, max_shuffles, spark, sf_dir, monkeypatch):
+    _check_plan_shape(name, max_shuffles, spark, sf_dir, monkeypatch)
 
 
 # ---------------------------------------------------------------------------
@@ -979,7 +970,7 @@ _SUSPECT_SF_A = "/root/testdata/sf0.01"
 _SUSPECT_SF_B = "/root/testdata/sf0.1"
 
 
-def test_registry_wide_scale_discipline(spark, sf_dir):
+def test_registry_wide_scale_discipline(spark, sf_dir, monkeypatch):
     """ONE pass over every registered query's plan, six invariants
     (VERDICT r8 item 4, generalized; r10 items 3 + leaf observability):
 
@@ -1022,8 +1013,11 @@ def test_registry_wide_scale_discipline(spark, sf_dir):
     explicit limits) pass structurally; bounded-DOMAIN keyed
     aggregates (langs, hours, design buckets) pass by measurement;
     there is deliberately NO name-keyed allowlist, so a reintroduction
-    anywhere in the registry fails here.  Positive controls for the
-    walkers and the suspect machinery live in the tests below."""
+    anywhere in the registry fails here.  Invariants 1-4 and 6 also
+    read the input of every ``localCheckpoint`` cut the build makes
+    (:func:`_plans`); the measured invariants 5 and 7 read the final
+    plan.  Positive controls for the walkers and the suspect machinery
+    live in the tests below."""
     from etl_onprem_to_cloud_spark.plans import (
         corpus_broadcast_hints,
         keyed_agg_suspects,
@@ -1037,14 +1031,17 @@ def test_registry_wide_scale_discipline(spark, sf_dir):
     suspect_queries = {}
     sba_queries = {}
     for name, spec in QUERIES.items():
-        df = spec.fn(spark, sf_dir)
-        v = corpus_broadcast_hints(df) + unpartitioned_corpus_windows(df)
-        plan = explain_str(df, "simple")
-        if "CartesianProduct" in plan:
-            v.append("cartesian-product")
-        if "BatchEvalPython" in plan:
-            v.append("row-at-a-time-python-udf")
-        v.extend(f"unresolved-leaf:{u}" for u in unresolved_corpus_leaves(df))
+        plans = _query_plans(name, spark, sf_dir, monkeypatch)
+        v = []
+        for d, _ in plans:
+            v += corpus_broadcast_hints(d) + unpartitioned_corpus_windows(d)
+            plan = explain_str(d, "simple")
+            if "CartesianProduct" in plan:
+                v.append("cartesian-product")
+            if "BatchEvalPython" in plan:
+                v.append("row-at-a-time-python-udf")
+            v.extend(f"unresolved-leaf:{u}" for u in unresolved_corpus_leaves(d))
+        df = plans[0][0]
         if keyed_agg_suspects(df):
             suspect_queries[name] = spec
         if string_buffer_agg_suspects(df):
