@@ -811,31 +811,70 @@ def _srp_dots_pandas(planes: list[list[float]]):
     return srp_dots
 
 
+def _pair_cosine_np(va: pd.Series, vb: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+    """Row-wise cosine of two vector columns, rounded to 6 decimals,
+    and the mask of rows where it is defined (both norms nonzero)."""
+    a = np.array(list(va), dtype=np.float64)
+    b = np.array(list(vb), dtype=np.float64)
+    num = (a * b).sum(axis=1)
+    den = np.sqrt((a * a).sum(axis=1)) * np.sqrt((b * b).sum(axis=1))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = np.where(den > 0, num / den, np.nan)
+    return np.round(cos, 6), den > 0
+
+
 def _pair_cosine_pandas():
-    """Vectorized twin of functions.vectors.cosine_similarity for the
-    candidate-verify step: one numpy pass per Arrow batch instead of an
-    interpreted 64-element fold per pair.  Matches the HOF form's
-    semantics (double math, NULL when either norm is zero) and its
-    round-6 output: the only float difference is dot-sum order, ~1e-16
-    relative, invisible after rounding to 1e-6 (differential-tested)."""
+    """Vectorized twin of functions.vectors.cosine_similarity: one
+    numpy pass per Arrow batch instead of an interpreted 64-element
+    fold per pair.  Matches the HOF form's semantics (double math,
+    NULL when either norm is zero) and its output: the only float
+    difference is dot-sum order, ~1e-16 relative, invisible after
+    rounding to 1e-6 (differential-tested)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
     def pair_cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        a = np.array(list(va), dtype=np.float64)
-        b = np.array(list(vb), dtype=np.float64)
-        num = (a * b).sum(axis=1)
-        den = np.sqrt((a * a).sum(axis=1)) * np.sqrt((b * b).sum(axis=1))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = np.where(den > 0, num / den, np.nan)
+        cos, defined = _pair_cosine_np(va, vb)
         # Nullable dtype: a zero norm must surface as SQL NULL (as the
         # HOF form does), not NaN -- Spark orders NaN above every value,
         # so a NaN would wrongly survive a >= threshold filter.
-        out = pd.Series(np.round(cos, 6), dtype="Float64")
-        out[den <= 0] = pd.NA
+        out = pd.Series(cos, dtype="Float64")
+        out[~defined] = pd.NA
         return out
 
     return pair_cos
+
+
+def _verified_pairs(pairs: DataFrame, threshold: float) -> DataFrame:
+    """``(id_a, id_b, cosine)`` for the rows of ``pairs`` (``id_a,
+    id_b, __va, __vb``) whose cosine is defined and at least
+    ``threshold``: the cosine and the filter in ONE ``mapInPandas``
+    pass.  A filter on a UDF column is pushed below the projection
+    that computes it, which plans the UDF twice per pair; here there
+    is no column to push through."""
+    from collections.abc import Iterator
+
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    schema = StructType([
+        pairs.schema["id_a"],
+        pairs.schema["id_b"],
+        StructField("cosine", DoubleType()),
+    ])
+
+    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            cos, defined = _pair_cosine_np(pdf["__va"], pdf["__vb"])
+            keep = defined & (cos >= threshold)
+            yield pd.DataFrame({
+                "id_a": pdf["id_a"].to_numpy()[keep],
+                "id_b": pdf["id_b"].to_numpy()[keep],
+                "cosine": cos[keep],
+            })
+
+    return pairs.mapInPandas(verify, schema)
 
 
 def srp_near_dup_pairs(
@@ -1013,30 +1052,31 @@ def srp_near_dup_pairs(
     # so without this each side re-runs the full projection pass.
     keyed = keyed.localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
     a, b = keyed.alias("a"), keyed.alias("b")
+    pairs = a.join(
+        b,
+        (F.col("a.table") == F.col("b.table"))
+        & (F.col("a.bucket") == F.col("b.bucket"))
+        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+    )
+    ids = (F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
     if projection == "pandas":
         # Candidate volume is occupancy-bounded but still the widest
         # stage (dozens of pairs per vector); verify each pair with one
         # numpy batch pass rather than an interpreted 64-element fold.
-        cos = _pair_cosine_pandas()(F.col("a.__v"), F.col("b.__v"))
+        verified = _verified_pairs(
+            pairs.select(
+                *ids, F.col("a.__v").alias("__va"), F.col("b.__v").alias("__vb")
+            ),
+            threshold,
+        )
     else:
-        cos = F.round(
-            cosine_similarity(F.col("a.__v"), F.col("b.__v")), 6
-        ).cast("double")
-    return (
-        a.join(
-            b,
-            (F.col("a.table") == F.col("b.table"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            cos.alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .distinct()
-    )
+        verified = pairs.select(
+            *ids,
+            F.round(cosine_similarity(F.col("a.__v"), F.col("b.__v")), 6)
+            .cast("double")
+            .alias("cosine"),
+        ).filter(F.col("cosine") >= threshold)
+    return verified.distinct()
 
 
 # --------------------------------------------------------------------------

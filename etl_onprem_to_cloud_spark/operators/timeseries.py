@@ -158,50 +158,49 @@ def ewma(
     value_col: str,
     alpha: float,
     out_col: str = "ewma",
-    impl: str = "stream",
 ) -> DataFrame:
-    """Per-key exponentially-weighted moving average via batch
-    ``applyInPandas`` -- the grouped-map escape hatch for semantics the
-    built-in operators genuinely cannot express: the EWMA recurrence
-    ``s_t = (1-a)*s_{t-1} + a*x_t`` (init ``s_1 = x_1``) depends on its
-    own previous OUTPUT, which no window frame provides.  (The closed
-    form with pow() exists but is numerically unstable and
-    engine-divergent; the recurrence is the stable, portable shape.)
+    """Per-key exponentially-weighted moving average -- a pandas escape
+    hatch for semantics the built-in operators genuinely cannot
+    express: the EWMA recurrence ``s_t = (1-a)*s_{t-1} + a*x_t`` (init
+    ``s_1 = x_1``) depends on its own previous OUTPUT, which no window
+    frame provides.  (The closed form with pow() exists but is
+    numerically unstable and engine-divergent; the recurrence is the
+    stable, portable shape.)
 
-    Scale shape: one shuffle on ``key_cols``; each group is processed
-    in one Arrow batch.  The recurrence forces a sequential pass WITHIN
-    a key (inherent to the operator, not the implementation); across
-    keys it parallelizes like any grouped-map.  The update is written
-    as the explicit ``(1-a)*s + a*x`` double expression so an external
-    SQL engine replaying the same recurrence (e.g. a recursive CTE)
+    Shape: range-partition on ``key_cols``, sort within partitions on
+    (keys, order), then ONE ``mapInPandas`` pass that walks each
+    partition sequentially, resetting state at key boundaries and
+    carrying the boundary key's state across Arrow batches -- one
+    Python invocation per Arrow batch instead of one per key (a
+    grouped ``applyInPandas`` took 2.5 s against ~1 s at sf0.1, 10k
+    keys of ~10 rows, where per-group dispatch dominated the math).
+    The range exchange's sampler reads the input, not the Python
+    stage, so the UDF runs once per row.  The recurrence is sequential
+    WITHIN a key (inherent to the operator); across keys it
+    parallelizes like any grouped map.  The update is written as the
+    explicit ``(1-a)*s + a*x`` double expression so an external SQL
+    engine replaying the same recurrence (e.g. a recursive CTE)
     reproduces it bit-for-bit -- pandas' own ewm() uses a different
     (weight-normalized) operation order and is NOT bit-stable against
     SQL.  Ties in ``order_cols`` would make the scan order ambiguous;
     callers must pass a total order per key.
+
+    Output order: partitions hold ascending, disjoint ``key_cols``
+    ranges (NULL keys first) and each is sorted on (keys, order), so a
+    caller that wants rows in (keys, order) order needs only
+    ``sortWithinPartitions`` on those columns, not an ``orderBy``
+    whose range sampler would run the Python stage a second time.
+    AQE coalesces only contiguous partitions, which keeps that order.
 
     NULL semantics (explicit): a NULL ``value_col`` contributes nothing
     to the state and gets a NULL ewma -- the skip-and-propagate rule,
     matching what a recursive-CTE oracle that carries state past NULL
     rows computes.  (Without the pd.isna guard a None arrives as object
     dtype and float(None) kills the whole job with an opaque executor
-    TypeError.)
-
-    ``impl`` picks the execution shape; both produce bit-identical
-    output (differential-tested):
-
-    - ``"stream"`` (default): repartition on ``key_cols``, sort within
-      partitions on (keys, order), then ONE ``mapInPandas`` pass that
-      walks each partition sequentially, resetting state at key
-      boundaries and carrying the boundary key's state across Arrow
-      batches.  One shuffle + one sort, and ONE Python invocation per
-      Arrow batch instead of one per key -- measured 2.5s -> ~1s at
-      sf0.1 (10k keys of ~10 rows: grouped-map dispatch overhead
-      dominated the math).
-    - ``"grouped"``: the classic ``groupBy().applyInPandas`` form --
-      simpler plan, and the better shape when groups are FEW AND LARGE
-      (per-group dispatch amortizes; no cross-batch state to reason
-      about).
+    TypeError.)  NULL keys form one group, as in ``groupBy``.
     """
+    from collections.abc import Iterator
+
     import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -212,35 +211,11 @@ def ewma(
     )
     one_minus = 1.0 - alpha
 
-    if impl == "grouped":
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(order_cols)
-            s = None
-            out = []
-            for x in pdf[value_col]:
-                if pd.isna(x):
-                    out.append(None)  # skip-and-propagate: state unchanged
-                    continue
-                x = float(x)
-                s = x if s is None else one_minus * s + alpha * x
-                out.append(s)
-            pdf[out_col] = out
-            return pdf
-
-        return df.groupBy(*key_cols).applyInPandas(fn, out_schema)
-
-    if impl != "stream":
-        raise ValueError(f"impl must be 'stream' or 'grouped', got {impl!r}")
-
-    from collections.abc import Iterator
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # Keys are contiguous within a sorted partition; only the
         # boundary key's state must survive an Arrow batch split.
-        # NULL keys: groupBy puts all nulls in ONE group, but NaN !=
-        # NaN would reset state per row -- normalize null key values to
-        # a shared sentinel so both impls agree.
+        # NULL keys share one group, but NaN != NaN would reset state
+        # per row -- normalize null key values to a shared sentinel.
         null_key = object()
         prev_key: object = object()  # sentinel unequal to any real key
         s = None
@@ -261,7 +236,7 @@ def ewma(
             pdf[out_col] = out
             yield pdf
 
-    parts = df.repartition(*[F.col(k) for k in key_cols]).sortWithinPartitions(
+    parts = df.repartitionByRange(*key_cols).sortWithinPartitions(
         *key_cols, *order_cols
     )
     return parts.mapInPandas(run, out_schema)
@@ -274,60 +249,59 @@ def clamped_running_sum(
     delta_col: str,
     floor_value: int = 0,
     cap_value: int | None = None,
-    impl: str = "stream",
 ) -> DataFrame:
     """Per-key clamped running sum (inventory/ledger semantics):
     ``bal_t = min(cap_value, max(floor_value, bal_{t-1} + delta_t))``,
     starting from ``floor_value``.  Like ``ewma`` this recurrence reads
-    its own previous OUTPUT, so it runs as a grouped ``applyInPandas``
-    fold.  ``delta_col`` must be an integer column (exact arithmetic;
-    quantize currency upstream), so the fold and a recursive-CTE SQL
-    twin walk identical states.
+    its own previous OUTPUT, so it runs as a sequential pandas fold.
+    ``delta_col`` must be an integer column (exact arithmetic; quantize
+    currency upstream), so the fold and a recursive-CTE SQL twin walk
+    identical states.
 
     Expressibility note: the FLOOR-ONLY form (``cap_value=None``) has
     the classic reflection closed form ``bal_t = floor + (P_t - min(0,
     min_{s<=t} P_s))`` over the plain prefix sum ``P`` -- it IS
-    window-expressible, and this implementation uses exactly that
-    identity as a vectorized numpy evaluation inside the fold (see
-    ``q_cusum_value_drift`` / ``q_max_drawdown_users`` for the
-    pure-window SQL siblings).  The TWO-SIDED clamp has no such closed
-    form (the cap and floor reflections interfere), so it folds
-    sequentially -- that is the genuinely window-inexpressible case.
+    window-expressible (see ``q_cusum_value_drift`` /
+    ``q_max_drawdown_users`` for the pure-window SQL siblings).  The
+    TWO-SIDED clamp has no such closed form (the cap and floor
+    reflections interfere) -- that is the genuinely
+    window-inexpressible case.
 
     Returns ONE summary row per key: n_rows, final_balance, n_clamps
     (times the floor bit), n_caps (times the ceiling bit; 0 when
-    uncapped), peak_balance.  Scale shape: one shuffle on ``key_cols``;
-    sequential within a key (inherent to the operator); output is
-    key-cardinality sized.  NULL deltas are treated as 0 (state
-    unchanged, never a clamp).  Deltas must satisfy |sum| < 2^53 per
-    key (exactness bound of the Arrow float64 null-passing path).
+    uncapped), peak_balance.  NULL deltas are treated as 0 (state
+    unchanged, never a clamp); NULL keys form one group.  Deltas must
+    satisfy |sum| < 2^53 per key (exactness bound of the Arrow float64
+    null-passing path).
 
-    ``impl`` mirrors :func:`ewma` (differential-tested identical):
-    ``"stream"`` (default) repartitions on keys, sorts within
-    partitions, and walks each partition in ONE ``mapInPandas`` pass
-    with key-boundary state resets -- one Python invocation per Arrow
-    batch instead of one per key (measured 3x faster on many small
-    groups: 6.7 s -> 1.1 s at sf0.1's 1500 x 67-row groups).
-    ``"grouped"`` is the classic ``groupBy().applyInPandas`` form,
-    better when groups are few and large; its uncapped path is
-    vectorized via the reflection closed form.
+    Shape, as :func:`ewma`: range-partition on ``key_cols``, sort
+    within partitions, and walk each partition in ONE ``mapInPandas``
+    pass with key-boundary state resets -- one Python invocation per
+    Arrow batch instead of one per key (3x faster than a grouped
+    ``applyInPandas`` on many small groups: 6.7 s -> 1.1 s at sf0.1's
+    1500 x 67-row groups).  The range exchange's sampler reads the
+    input, so the fold runs once per row.  Sequential within a key
+    (inherent to the operator); output is key-cardinality sized.
+    Output order: summary rows come in ascending key order within each
+    partition and partitions hold ascending, disjoint key ranges, so
+    ``sortWithinPartitions(*key_cols)`` yields the ORDER BY order
+    without a second exchange (see :func:`ewma`).
     """
-    import numpy as np
+    from collections.abc import Iterator
+
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
 
     if cap_value is not None and cap_value < floor_value:
         raise ValueError("clamped_running_sum: cap_value < floor_value")
 
-    # In key_cols ORDER, not schema order: both impls emit key values
-    # positionally in key_cols order (groupBy's key tuple / the stream
-    # walk's zip), so a schema-ordered output schema would silently
-    # swap key columns whenever key_cols=['b','a'] on an (a, b, ...)
-    # frame.
+    # In key_cols ORDER, not schema order: the walk emits key values
+    # positionally in key_cols order, so a schema-ordered output schema
+    # would silently swap key columns whenever key_cols=['b','a'] on an
+    # (a, b, ...) frame.
     by_name = {f.name: f for f in df.schema.fields}
-    key_fields = [by_name[k] for k in key_cols]
     out_schema = StructType(
-        key_fields
+        [by_name[k] for k in key_cols]
         + [
             StructField("n_rows", LongType()),
             StructField("final_balance", LongType()),
@@ -336,116 +310,59 @@ def clamped_running_sum(
             StructField("peak_balance", LongType()),
         ]
     )
+    out_cols = [f.name for f in out_schema.fields]
 
-    if impl == "stream":
-        from collections.abc import Iterator
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # Keys are contiguous within a sorted partition; the boundary
+        # key's state survives Arrow batch splits.  NULL key values
+        # normalize to a shared sentinel (the ewma convention).
+        null_key = object()
+        prev_key: object = object()
+        raw_key: tuple = ()
+        n = bal = clamps = caps = peak = 0
 
-        out_cols = [f.name for f in out_schema.fields]
+        def summary_row():
+            return [
+                *(None if v is null_key else v for v in raw_key),
+                n,
+                bal,
+                clamps,
+                caps,
+                peak,
+            ]
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # Keys are contiguous within a sorted partition; the
-            # boundary key's state survives Arrow batch splits.  NULL
-            # key values normalize to a shared sentinel (the ewma
-            # convention) so stream and grouped impls agree.
-            null_key = object()
-            prev_key: object = object()
-            raw_key: tuple = ()
-            n = bal = clamps = caps = peak = 0
-
-            def summary_row():
-                return [
-                    *(None if v is null_key else v for v in raw_key),
-                    n,
-                    bal,
-                    clamps,
-                    caps,
-                    peak,
-                ]
-
-            started = False
-            for pdf in batches:
-                rows_out = []
-                keys = zip(*(pdf[k] for k in key_cols))
-                for k, d in zip(keys, pdf[delta_col].tolist()):
-                    k = tuple(null_key if pd.isna(v) else v for v in k)
-                    if k != prev_key:
-                        if started:
-                            rows_out.append(summary_row())
-                        prev_key, raw_key = k, k
-                        n = clamps = caps = 0
-                        bal = peak = floor_value
-                        started = True
-                    n += 1
-                    if d is None or pd.isna(d):
-                        continue
-                    nxt = bal + int(d)
-                    if nxt < floor_value:
-                        clamps += 1
-                        nxt = floor_value
-                    elif cap_value is not None and nxt > cap_value:
-                        caps += 1
-                        nxt = cap_value
-                    bal = nxt
-                    if bal > peak:
-                        peak = bal
-                if rows_out:
-                    yield pd.DataFrame(rows_out, columns=out_cols)
-            if started:
-                yield pd.DataFrame([summary_row()], columns=out_cols)
-
-        parts = df.repartition(
-            *[F.col(k) for k in key_cols]
-        ).sortWithinPartitions(*key_cols, *order_cols)
-        return parts.mapInPandas(run, out_schema)
-
-    if impl != "grouped":
-        raise ValueError(f"impl must be 'stream' or 'grouped', got {impl!r}")
-
-    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_cols)
-        n = len(pdf)
-        d = (
-            pd.to_numeric(pdf[delta_col])
-            .fillna(0)
-            .to_numpy()
-            .astype(np.int64)
-        )
-        if cap_value is None:
-            # Reflection closed form, vectorized: rel_t = P_t - m_t with
-            # m_t = min(0, running-min P); a clamp fires iff P makes a
-            # strict new minimum below every earlier prefix (incl. 0).
-            p = np.cumsum(d)
-            m = np.minimum(np.minimum.accumulate(p), 0) if n else p
-            rel_last = int(p[-1] - m[-1]) if n else 0
-            peak_rel = int((p - m).max()) if n else 0
-            m_prev = np.concatenate(([0], m[:-1])) if n else m
-            clamps = int((p < m_prev).sum())
-            caps = 0
-            bal = floor_value + rel_last
-            peak = floor_value + peak_rel
-        else:
-            bal = floor_value
-            clamps = caps = 0
-            peak = floor_value
-            for dv in d.tolist():
-                nxt = bal + dv
+        started = False
+        for pdf in batches:
+            rows_out = []
+            keys = zip(*(pdf[k] for k in key_cols))
+            for k, d in zip(keys, pdf[delta_col].tolist()):
+                k = tuple(null_key if pd.isna(v) else v for v in k)
+                if k != prev_key:
+                    if started:
+                        rows_out.append(summary_row())
+                    prev_key, raw_key = k, k
+                    n = clamps = caps = 0
+                    bal = peak = floor_value
+                    started = True
+                n += 1
+                if d is None or pd.isna(d):
+                    continue
+                nxt = bal + int(d)
                 if nxt < floor_value:
                     clamps += 1
                     nxt = floor_value
-                elif nxt > cap_value:
+                elif cap_value is not None and nxt > cap_value:
                     caps += 1
                     nxt = cap_value
                 bal = nxt
                 if bal > peak:
                     peak = bal
-        row = {k.name: key[i] for i, k in enumerate(key_fields)}
-        row.update(
-            n_rows=n,
-            final_balance=bal,
-            n_clamps=clamps,
-            n_caps=caps,
-            peak_balance=peak,
-        )
-        return pd.DataFrame([row])
+            if rows_out:
+                yield pd.DataFrame(rows_out, columns=out_cols)
+        if started:
+            yield pd.DataFrame([summary_row()], columns=out_cols)
 
-    return df.groupBy(*key_cols).applyInPandas(fn, out_schema)
+    parts = df.repartitionByRange(*key_cols).sortWithinPartitions(
+        *key_cols, *order_cols
+    )
+    return parts.mapInPandas(run, out_schema)

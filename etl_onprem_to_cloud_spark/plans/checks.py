@@ -106,6 +106,88 @@ def array_typed_exchanges(df: DataFrame) -> list[str]:
     return out
 
 
+#: Physical nodes that run Python workers (class simple names).
+_PYTHON_EXECS = frozenset({
+    "ArrowAggregatePythonExec", "ArrowEvalPythonExec",
+    "ArrowEvalPythonUDTFExec", "ArrowWindowPythonExec",
+    "BatchEvalPythonExec", "BatchEvalPythonUDTFExec",
+    "FlatMapCoGroupsInArrowExec", "FlatMapCoGroupsInPandasExec",
+    "FlatMapGroupsInArrowExec", "FlatMapGroupsInPandasExec",
+    "MapInArrowExec", "MapInPandasExec",
+})
+
+
+def _python_udf_calls(node) -> list[str]:
+    """``"name(arg#id, ...)"`` for every Python UDF in ``node``'s
+    expressions: the call and the exact input attributes it reads."""
+    calls: list[str] = []
+    exprs = node.expressions()
+    stack = [exprs.apply(i) for i in range(exprs.size())]
+    while stack:
+        e = stack.pop()
+        ch = e.children()
+        kids = [ch.apply(i) for i in range(ch.size())]
+        if e.getClass().getSimpleName() == "PythonUDF":
+            calls.append(f"{e.name()}({', '.join(k.toString() for k in kids)})")
+        stack.extend(kids)
+    return calls
+
+
+def python_stage_reruns(df: DataFrame) -> list[str]:
+    """One line for every way ``df``'s plan runs a Python stage's work
+    twice (empty = each Python node runs once per row):
+
+    * ``"<Node> under a range exchange"``: a Python-evaluating node in
+      the stage a range-partitioning exchange reads.  The range
+      partitioner first runs a sampling job over that stage's whole
+      output and then runs the map stage, so the Python work runs in
+      each.  Moving the range exchange below the Python node (range-
+      partition the input, then sort within partitions) keeps it once.
+    * ``"<udf>(<args>) twice in one stage"``: one Python UDF evaluated
+      by two nodes over the same input attributes in one stage -- a
+      filter on the UDF's result pushed below the projection that
+      computes it plans a second evaluation under the filter.
+
+    Reads the initial adaptive plan (what ``explain`` prints with
+    ``isFinalPlan=false``): EnsureRequirements has placed the
+    exchanges there, while the adaptive node's input plan holds none.
+    A stage is the subtree between exchanges; subqueries and broadcast
+    builds are their own stages."""
+    out: set[str] = set()
+    stages = [(df._jdf.queryExecution().executedPlan(), False)]
+    while stages:
+        root, under_range = stages.pop()
+        calls: set[str] = set()
+        stack = [root]
+        while stack:
+            node = stack.pop()
+            name = node.getClass().getSimpleName()
+            if name == "AdaptiveSparkPlanExec":
+                stack.append(node.initialPlan())
+                continue
+            if name in _PYTHON_EXECS:
+                if under_range:
+                    out.add(f"{name[:-4]} under a range exchange")
+                for call in _python_udf_calls(node):
+                    if call in calls:
+                        out.add(f"{call} twice in one stage")
+                    calls.add(call)
+            sq = node.subqueries()
+            for i in range(sq.size()):
+                stages.append((sq.apply(i), False))
+            ch = node.children()
+            kids = [ch.apply(i) for i in range(ch.size())]
+            if name.endswith("ExchangeExec"):
+                ranged = (
+                    node.outputPartitioning().getClass().getSimpleName()
+                    == "RangePartitioning"
+                )
+                stages.extend((k, ranged) for k in kids)
+            else:
+                stack.extend(kids)
+    return sorted(out)
+
+
 #: Fixture tables whose row counts scale linearly with SF.  nation and
 #: region are FIXED catalogs (25 / 5 rows at every SF) and are absent.
 CORPUS_TABLES = frozenset(

@@ -572,11 +572,15 @@ def q_weighted_median_price(spark, sf_dir):
     group -- fine for few large groups with Arrow transfer; at true
     100 TB group sizes switch to approx_percentile or a distributed
     selection.  The docstring IS the scale contract; the UDAF is the
-    exact-path twin."""
+    exact-path twin.  The input is range-partitioned on the group key:
+    the UDAF's output keeps that partitioning, so the ORDER BY is a
+    local sort, and no range exchange (whose sampler would run the
+    UDAF a second time) sits above the Python stage."""
     li = cat(spark, sf_dir).lineitem
     wm = _weighted_median_udaf()
     return (
-        li.groupBy("l_returnflag")
+        li.repartitionByRange("l_returnflag")
+        .groupBy("l_returnflag")
         .agg(wm("l_extendedprice", "l_quantity").alias("wmedian_price"))
         .orderBy("l_returnflag")
     )

@@ -354,7 +354,7 @@ ORDER BY user_id, event_id
     tags=("timeseries", "pandas-udf", "grouped-map", "ring-b"),
     description=(
         "Per-user EWMA of event values (alpha=0.25, init = first "
-        "value) over (ts, event_id) order -- the batch applyInPandas "
+        "value) over (ts, event_id) order -- the batch mapInPandas "
         "surface, used where it is genuinely required: the recurrence "
         "reads its own previous output, which no window frame can.  "
         "alpha is chosen binary-exact and the update is the literal "
@@ -379,13 +379,16 @@ def q_ewma_user_values(spark, sf_dir):
     # multiply) disagree by 1 ulp of the 6th digit.  floor(x*1e6)/1e6
     # depends only on the (bit-identical) double value, never on a
     # decimal re-interpretation -- 3 of 10k rows flipped before this.
+    # The operator's output is range-partitioned on user_id, so a local
+    # sort gives the ORDER BY order; an orderBy would plan a range
+    # exchange whose sampler runs the pandas stage a second time.
     return out.select(
         "user_id",
         "event_id",
         fmt_ts("ts", "ts"),
         F.round("value", 6).alias("value"),
         (F.floor(F.col("ewma") * 1000000) / 1000000).alias("ewma"),
-    ).orderBy("user_id", "event_id")
+    ).sortWithinPartitions("user_id", "event_id")
 
 
 # --------------------------------------------------------------------------
@@ -806,7 +809,7 @@ SELECT rec.user_id,
 FROM rec JOIN n ON rec.user_id = n.user_id AND rec.rn = n.n_rows
 ORDER BY rec.user_id
 """,
-    tags=("timeseries", "recurrence", "applyInPandas", "ring-c"),
+    tags=("timeseries", "recurrence", "mapInPandas", "ring-c"),
     description=(
         "Per-user credit ledger floored at zero AND capped at a "
         "500.0-unit credit ceiling: purchases/errors debit, other "
@@ -822,10 +825,12 @@ ORDER BY rec.user_id
     ),
 )
 def q_clamped_balance_users(spark, sf_dir):
-    """One shuffle on user_id; the fold is sequential within a key
-    (inherent to two-sided clamped semantics) and emits one row per
+    """One range exchange on user_id; the fold is sequential within a
+    key (inherent to two-sided clamped semantics) and emits one row per
     user, so at 100 TB the output is user-cardinality sized and the
-    only data motion is the grouped exchange.  All arithmetic is
+    only data motion is that exchange.  Its output is range-ordered on
+    user_id, so the ORDER BY is a local sort with no second exchange
+    (and no second run of the fold).  All arithmetic is
     BIGINT milli-units -- floor(value*1000) is the same IEEE double op
     in both engines, everything after is exact."""
     from ..operators.timeseries import clamped_running_sum
@@ -854,7 +859,7 @@ def q_clamped_balance_users(spark, sf_dir):
         F.col("n_clamps").cast("bigint").alias("n_clamps"),
         F.col("n_caps").cast("bigint").alias("n_caps"),
         (F.col("peak_balance") / F.lit(1000.0)).alias("peak_balance"),
-    ).orderBy("user_id")
+    ).sortWithinPartitions("user_id")
 
 
 # --------------------------------------------------------------------------

@@ -106,10 +106,29 @@ def test_ewma_null_values_skip_and_propagate(spark):
     assert rows[3] == 0.5 * 10.0 + 0.5 * 20.0, "state carried past the null row"
 
 
-def test_ewma_stream_matches_grouped(spark, sf_dir):
-    """Differential: the partition-streaming mapInPandas form and the
-    grouped applyInPandas form are bit-identical (incl. null rows and
-    keys that straddle Arrow batch boundaries -- forced tiny batches)."""
+def _ewma_fold(rows, alpha):
+    """Reference EWMA: ``{(key, order): ewma}`` from ``(key, order,
+    value)`` rows, folded per key in order in plain Python (skip-and-
+    propagate on NULL values; NULL keys form one group)."""
+    by_key: dict = {}
+    for k, t, v in rows:
+        by_key.setdefault(k, []).append((t, v))
+    out = {}
+    for k, seq in by_key.items():
+        s = None
+        for t, v in sorted(seq):
+            if v is None:
+                out[(k, t)] = None
+                continue
+            s = v if s is None else (1.0 - alpha) * s + alpha * v
+            out[(k, t)] = s
+    return out
+
+
+def test_ewma_matches_python_fold(spark, sf_dir):
+    """The partition-streaming mapInPandas walk equals a plain Python
+    fold bit for bit, with null values and keys that straddle Arrow
+    batch boundaries (forced tiny batches)."""
     from etl_onprem_to_cloud_spark.operators.timeseries import ewma
     from etl_onprem_to_cloud_spark.sources.io import load_table
     from pyspark.sql import functions as F
@@ -120,37 +139,30 @@ def test_ewma_stream_matches_grouped(spark, sf_dir):
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
-        a = sorted(
-            (r.user_id, r.event_id, r.ewma)
-            for r in ewma(ev, ["user_id"], ["event_id"], "v", 0.3, impl="stream").collect()
-        )
-        b = sorted(
-            (r.user_id, r.event_id, r.ewma)
-            for r in ewma(ev, ["user_id"], ["event_id"], "v", 0.3, impl="grouped").collect()
-        )
+        got = {
+            (r.user_id, r.event_id): r.ewma
+            for r in ewma(ev, ["user_id"], ["event_id"], "v", 0.3).collect()
+        }
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    assert a == b and len(a) > 0
-    assert any(x[2] is None for x in a), "null rows exercised"
+    want = _ewma_fold([tuple(r) for r in ev.collect()], 0.3)
+    assert got == want and len(got) > 0
+    assert any(x is None for x in got.values()), "null rows exercised"
 
 
 def test_ewma_null_keys_form_one_group(spark):
-    """groupBy puts all NULL keys in one group; the streamed impl must
-    agree (NaN-normalized key comparison, not NaN != NaN per row)."""
+    """NULL keys form one group, as in groupBy (NaN-normalized key
+    comparison in the walk, not NaN != NaN per row)."""
     from etl_onprem_to_cloud_spark.operators.timeseries import ewma
 
     df = spark.createDataFrame(
         [(None, 1, 10.0), (None, 2, 20.0), (1, 1, 5.0)],
         "k int, t int, v double",
     )
-    for impl in ("stream", "grouped"):
-        rows = {
-            (r.k, r.t): r.ewma
-            for r in ewma(df, ["k"], ["t"], "v", 0.5, impl=impl).collect()
-        }
-        assert rows[(None, 2)] == 0.5 * 10.0 + 0.5 * 20.0, (
-            f"{impl}: null keys must share one recurrence"
-        )
+    rows = {(r.k, r.t): r.ewma for r in ewma(df, ["k"], ["t"], "v", 0.5).collect()}
+    assert rows[(None, 2)] == 0.5 * 10.0 + 0.5 * 20.0, (
+        "null keys must share one recurrence"
+    )
 
 
 def test_clamped_running_sum_basic(spark):
@@ -180,10 +192,38 @@ def test_clamped_running_sum_basic(spark):
     assert out["b"] == (2, 2, 1, 2)
 
 
-def test_clamped_stream_grouped_identical(spark):
-    """Both execution shapes (mapInPandas stream walk vs grouped
-    applyInPandas) must emit identical summaries, including null keys
-    and null deltas, capped and uncapped."""
+def _clamp_fold(rows, floor, cap):
+    """Reference clamped running sum: ``{key: (n_rows, final_balance,
+    n_clamps, n_caps, peak_balance)}`` from ``(key, order, delta)``
+    rows, folded per key in order in plain Python (NULL deltas count
+    as rows and leave the balance unchanged)."""
+    by_key: dict = {}
+    for k, t, d in rows:
+        by_key.setdefault(k, []).append((t, d))
+    out = {}
+    for k, seq in by_key.items():
+        bal = peak = floor
+        clamps = caps = 0
+        for _, d in sorted(seq):
+            if d is None:
+                continue
+            nxt = bal + d
+            if nxt < floor:
+                clamps += 1
+                nxt = floor
+            elif cap is not None and nxt > cap:
+                caps += 1
+                nxt = cap
+            bal = nxt
+            peak = max(peak, bal)
+        out[k] = (len(seq), bal, clamps, caps, peak)
+    return out
+
+
+def test_clamped_matches_python_fold(spark):
+    """The mapInPandas walk emits the same summaries as a plain Python
+    fold, including null keys and null deltas, capped and uncapped,
+    with keys straddling Arrow batch boundaries (forced tiny batches)."""
     import random
 
     from etl_onprem_to_cloud_spark.operators.timeseries import clamped_running_sum
@@ -194,27 +234,19 @@ def test_clamped_stream_grouped_identical(spark):
         for t in range(1, 60):
             rows.append((k, t, rng.choice([-7, -3, 0, 2, 5, 9, None])))
     df = spark.createDataFrame(rows, "k string, t int, d long").repartition(5)
-    for cap, floor in ((None, 0), (None, 2), (6, 0), (6, -3)):
-        got = {}
-        for impl in ("stream", "grouped"):
-            got[impl] = sorted(
-                (
-                    (
-                        r.k,
-                        r.n_rows,
-                        r.final_balance,
-                        r.n_clamps,
-                        r.n_caps,
-                        r.peak_balance,
-                    )
-                    for r in clamped_running_sum(
-                        df, ["k"], ["t"], "d", floor_value=floor,
-                        cap_value=cap, impl=impl
-                    ).collect()
-                ),
-                key=lambda t: (t[0] is None, t),
-            )
-        assert got["stream"] == got["grouped"], f"cap={cap} floor={floor}"
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        for cap, floor in ((None, 0), (None, 2), (6, 0), (6, -3)):
+            got = {
+                r.k: (r.n_rows, r.final_balance, r.n_clamps, r.n_caps, r.peak_balance)
+                for r in clamped_running_sum(
+                    df, ["k"], ["t"], "d", floor_value=floor, cap_value=cap
+                ).collect()
+            }
+            assert got == _clamp_fold(rows, floor, cap), f"cap={cap} floor={floor}"
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
 def test_clamped_running_sum_two_sided_cap(spark):
@@ -232,9 +264,9 @@ def test_clamped_running_sum_two_sided_cap(spark):
 
 
 def test_clamped_closed_form_matches_sequential_fold(spark):
-    """The vectorized reflection closed form (cap=None) must walk the
-    identical states as a plain sequential fold, on adversarial
-    deltas: runs of debits, exact-zero landings, repeated minima."""
+    """The floor-only walk lands on the states of a plain sequential
+    fold on adversarial deltas: runs of debits, exact-zero landings,
+    repeated minima."""
     import random
 
     from etl_onprem_to_cloud_spark.operators.timeseries import clamped_running_sum
@@ -246,33 +278,11 @@ def test_clamped_closed_form_matches_sequential_fold(spark):
             d = rng.choice([-5, -3, -1, 0, 1, 2, 3, None, -2, 4])
             rows.append((k, t, d))
     df = spark.createDataFrame(rows, "k string, t int, d long")
-    # impl="grouped" is the path that vectorizes the reflection closed
-    # form when uncapped -- the thing under test here (stream is the
-    # sequential walk and would just mirror the reference fold).
     got = {
-        r.k: (r.final_balance, r.n_clamps, r.n_caps, r.peak_balance)
-        for r in clamped_running_sum(
-            df, ["k"], ["t"], "d", floor_value=2, impl="grouped"
-        ).collect()
+        r.k: (r.n_rows, r.final_balance, r.n_clamps, r.n_caps, r.peak_balance)
+        for r in clamped_running_sum(df, ["k"], ["t"], "d", floor_value=2).collect()
     }
-    # reference sequential fold
-    want = {}
-    by_key: dict = {}
-    for k, t, d in rows:
-        by_key.setdefault(k, []).append((t, d))
-    for k, seq in by_key.items():
-        bal, clamps, peak = 2, 0, 2
-        for _, d in sorted(seq):
-            if d is None:
-                continue
-            nxt = bal + d
-            if nxt < 2:
-                clamps += 1
-                nxt = 2
-            bal = nxt
-            peak = max(peak, bal)
-        want[k] = (bal, clamps, 0, peak)
-    assert got == want
+    assert got == _clamp_fold(rows, 2, None)
 
 
 def test_clamped_running_sum_order_insensitive_input(spark):
@@ -294,7 +304,7 @@ def test_clamped_running_sum_order_insensitive_input(spark):
 
 def test_clamped_key_cols_order_differs_from_schema(spark):
     """key_cols in a different order than the schema must not swap the
-    output key columns (both impls emit keys positionally in key_cols
+    output key columns (the walk emits keys positionally in key_cols
     order)."""
     from etl_onprem_to_cloud_spark.operators.timeseries import clamped_running_sum
 
@@ -302,9 +312,6 @@ def test_clamped_key_cols_order_differs_from_schema(spark):
         [("x", 7, 1, 5), ("x", 7, 2, -9), ("y", 8, 1, 4)],
         "a string, b int, t int, d long",
     )
-    for impl in ("stream", "grouped"):
-        rows = clamped_running_sum(
-            df, ["b", "a"], ["t"], "d", impl=impl
-        ).collect()
-        got = {(r.b, r.a): (r.final_balance, r.n_clamps) for r in rows}
-        assert got == {(7, "x"): (0, 1), (8, "y"): (4, 0)}, impl
+    rows = clamped_running_sum(df, ["b", "a"], ["t"], "d").collect()
+    got = {(r.b, r.a): (r.final_balance, r.n_clamps) for r in rows}
+    assert got == {(7, "x"): (0, 1), (8, "y"): (4, 0)}

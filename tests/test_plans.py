@@ -1007,13 +1007,16 @@ def test_registry_wide_scale_discipline(spark, sf_dir, monkeypatch):
        shuffle-width conf can split it (the r10 sf100 probe caught
        DSIR's first(lang) per-doc rollup at 12.9 GB of sort spill /
        exponent 1.06 at BOTH widths; fixed by promoting lang to a
-       grouping key).
+       grouping key);
+    8. every Python stage runs once (:func:`python_stage_reruns`): no
+       Python node in the stage a range exchange samples, and no
+       Python UDF evaluated twice over one input in one stage.
 
     Bounded hinted/window inputs (fixed catalogs, scalar aggregates,
     explicit limits) pass structurally; bounded-DOMAIN keyed
     aggregates (langs, hours, design buckets) pass by measurement;
     there is deliberately NO name-keyed allowlist, so a reintroduction
-    anywhere in the registry fails here.  Invariants 1-4 and 6 also
+    anywhere in the registry fails here.  Invariants 1-4, 6 and 8 also
     read the input of every ``localCheckpoint`` cut the build makes
     (:func:`_plans`); the measured invariants 5 and 7 read the final
     plan.  Positive controls for the walkers and the suspect machinery
@@ -1021,6 +1024,7 @@ def test_registry_wide_scale_discipline(spark, sf_dir, monkeypatch):
     from etl_onprem_to_cloud_spark.plans import (
         corpus_broadcast_hints,
         keyed_agg_suspects,
+        python_stage_reruns,
         string_buffer_agg_suspects,
         suspect_group_count,
         unpartitioned_corpus_windows,
@@ -1040,6 +1044,7 @@ def test_registry_wide_scale_discipline(spark, sf_dir, monkeypatch):
                 v.append("cartesian-product")
             if "BatchEvalPython" in plan:
                 v.append("row-at-a-time-python-udf")
+            v.extend(python_stage_reruns(d))
             v.extend(f"unresolved-leaf:{u}" for u in unresolved_corpus_leaves(d))
         df = plans[0][0]
         if keyed_agg_suspects(df):
@@ -1103,6 +1108,42 @@ def test_registry_wide_scale_discipline(spark, sf_dir, monkeypatch):
         f"INPUT growth (>{_SUSPECT_GROWTH_MAX}x over sf0.01->sf0.1): "
         f"{sba_grow}"
     )
+
+
+def test_python_stage_rerun_guard_controls(spark):
+    """The guard names both rerun shapes and passes their fixes: an
+    ORDER BY over a pandas stage (its range sampler runs the stage
+    again) against a range exchange below it, and a filter on a UDF
+    column (pushed below the projection, so the UDF is planned twice)
+    against one mapInPandas pass that computes and filters."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.functions import pandas_udf
+
+    from etl_onprem_to_cloud_spark.plans import python_stage_reruns
+
+    @pandas_udf("double")
+    def plus_one(v):
+        return v + 1.0
+
+    def walk(batches):
+        for pdf in batches:
+            yield pdf[pdf["v"] > 3.0]
+
+    df = spark.createDataFrame([(k, float(k)) for k in range(20)], "k int, v double")
+    mapped = df.mapInPandas(walk, df.schema)
+    assert python_stage_reruns(mapped.orderBy("k")) == [
+        "MapInPandas under a range exchange"
+    ]
+    ranged_first = df.repartitionByRange("k").mapInPandas(walk, df.schema)
+    assert python_stage_reruns(ranged_first.sortWithinPartitions("k")) == []
+    agg = df.groupBy("k").agg(F.sum("v").alias("v"))
+    assert python_stage_reruns(agg.orderBy("k")) == []  # JVM-only stage
+    twice = python_stage_reruns(
+        df.select("k", plus_one("v").alias("p")).filter(F.col("p") > 3.0)
+    )
+    assert len(twice) == 1 and twice[0].startswith("plus_one(v#")
+    assert twice[0].endswith(") twice in one stage")
+    assert python_stage_reruns(mapped) == []
 
 
 def test_corpus_broadcast_guard_positive_controls(spark, sf_dir):
